@@ -5468,11 +5468,10 @@ def q_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     output carries the estimate, the exact count, and the never-
     undercounts invariant. The md5 hash rows make the whole sketch
     reproducible in the DuckDB oracle."""
-    from hdp_tez_spark.extensions.dedup import _tokens
     from hdp_tez_spark.extensions.sketches import cms_build, cms_estimate
 
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
+    toks = docs.select(F.explode(T.tokenize(F.col("text"))).alias("word"))
     sketch = cms_build(toks, "word", d=4, w=256)
     est = cms_estimate(sketch, toks.distinct(), "word", d=4, w=256)
     exact = toks.groupBy("word").agg(F.count(F.lit(1)).alias("exact"))
@@ -5751,8 +5750,8 @@ FROM s GROUP BY user_id
 
 def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram language-model counts (functions/text.py ngram_counts):
-    the n-gram array is a map-side sequence+transform over the token
-    array, so the only shuffle is the partially-aggregated count —
+    the n-gram array is a map-side zip of shifted token slices
+    (word_ngrams), so the only shuffle is the partially-aggregated count —
     WordCount's combiner shape (Combiner.java:39-41) at n-gram
     granularity."""
     from hdp_tez_spark.functions.text import ngram_counts
@@ -9891,12 +9890,12 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the odd-id documents — the tokenizer/shard coverage readout a
     pipeline runs before committing a tokenizer. Per-occurrence
     counting; integer counts make every rate exact at 6 dp."""
-    from hdp_tez_spark.extensions.textstats import _tokens, oov_rate
+    from hdp_tez_spark.extensions.textstats import oov_rate
 
     docs = _t(spark, sf_dir, "documents")
     vocab = (
         docs.where(F.col("doc_id") % 2 == 0)
-        .select(F.explode(_tokens(F.col("text"))).alias("term"))
+        .select(F.explode(T.tokenize(F.col("text"))).alias("term"))
         .distinct()
     )
     return oov_rate(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from hdp_tez_spark.extensions.dedup import _md5_long, _shingles
 from hdp_tez_spark.extensions.splits import hash_bucket
+from hdp_tez_spark.functions.text import tokenize
 from hdp_tez_spark.parallel import spread as _spread
 from hdp_tez_spark.plans.checkpoints import truncate_lineage
 
@@ -270,15 +271,11 @@ def chunk_documents(
     """
     if chunk_size <= 0 or stride <= 0:
         raise ValueError("chunk_size and stride must be positive")
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-        lambda t: t != F.lit(""),
-    )
     # last start index: largest multiple of stride strictly below n
     last = (F.size("__toks") - 1) - F.pmod(F.size("__toks") - 1, F.lit(stride))
     return (
         _spread(df.select(id_col, text_col))
-        .select(F.col(id_col), toks.alias("__toks"))
+        .select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
         .where(F.size("__toks") > 0)
         .select(
             F.col(id_col),

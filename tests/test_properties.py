@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from hdp_tez_spark.extensions.dedup import connected_components
 from hdp_tez_spark.operators.joins import asof_join, salted_join
+from tests.conftest import py_shingles, py_tokens
 
 SETTINGS = dict(
     max_examples=8,
@@ -705,24 +706,6 @@ docs_texts = st.lists(
 )
 
 
-def _py_tokens(text: str) -> list[str]:
-    """Python twin of dedup._tokens: lowercase, split on [^a-z0-9]+,
-    drop empties."""
-    import re
-
-    return [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
-
-
-def _py_shingles(text: str, k: int) -> set[str]:
-    """Python twin of dedup._shingles: distinct word k-grams; short or
-    empty docs collapse to the single joined-token shingle (empty doc ->
-    the empty string, exactly like concat_ws over an empty array)."""
-    toks = _py_tokens(text)
-    if len(toks) >= k:
-        return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
-    return {" ".join(toks)}
-
-
 def _py_levenshtein(a: str, b: str) -> int:
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
@@ -752,7 +735,7 @@ def test_edit_distance_pairs_matches_python_reference(spark, texts, max_dist):
     want = {}
     for i, a in enumerate(vals):
         for b in vals[i + 1:]:
-            if not (set(_py_tokens(a)) & set(_py_tokens(b))):
+            if not (set(py_tokens(a)) & set(py_tokens(b))):
                 continue  # token blocking: pair is outside the contract
             d = _py_levenshtein(a, b)
             if d <= max_dist:
@@ -778,7 +761,7 @@ def test_prefix_filter_join_matches_python_jaccard(spark, texts, threshold):
             df, "doc_id", "text", threshold=threshold, k=1
         ).collect()
     }
-    sets = {i: _py_shingles(t, 1) for i, t in rows}
+    sets = {i: py_shingles(t, 1) for i, t in rows}
     want = {}
     for i in sets:
         for j in sets:
@@ -809,7 +792,7 @@ def test_simhash_fingerprints_match_python_reference(spark, texts):
         simhash_fingerprints,
     )
 
-    rows = [(i, t) for i, t in enumerate(texts) if _py_tokens(t)]
+    rows = [(i, t) for i, t in enumerate(texts) if py_tokens(t)]
     if not rows:
         return
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -820,7 +803,7 @@ def test_simhash_fingerprints_match_python_reference(spark, texts):
     want = {}
     for i, t in rows:
         votes = [0] * SIMHASH_BITS
-        for tok in _py_tokens(t):
+        for tok in py_tokens(t):
             h = _py_md5_long(tok)
             for b in range(SIMHASH_BITS):
                 votes[b] += 1 if (h >> b) & 1 else -1
@@ -852,7 +835,7 @@ def test_minhash_signatures_match_python_reference(spark, texts):
     coeffs = _perm_coeffs(num_perms)
     want = {}
     for i, t in rows:
-        xs = [_py_md5_long(s) % MINHASH_P for s in _py_shingles(t, k)]
+        xs = [_py_md5_long(s) % MINHASH_P for s in py_shingles(t, k)]
         for p, (a, b) in enumerate(coeffs):
             want[(i, p)] = min((a * x + b) % MINHASH_P for x in xs)
     assert got == want
@@ -888,7 +871,7 @@ def test_langid_matches_python_reference(spark, texts):
     got = {r.id: (r.pred_lang, r.pred_score) for r in langid(df, "id", "s").collect()}
     want = {}
     for i, t in enumerate(texts):
-        toks = _py_tokens(t)
+        toks = py_tokens(t)
         cands = []
         for lang in sorted(LANG_STOPWORDS):
             frac = (
@@ -1006,7 +989,7 @@ def test_repetition_stats_matches_python_reference(spark, texts):
     }
     want = {}
     for i, t in enumerate(texts):
-        toks = _py_tokens(t)
+        toks = py_tokens(t)
         n, u = len(toks), len(set(toks))
         want[i] = (n, u, round(1 - u / n, 6) if n else 0.0)
     assert got == want
@@ -1025,7 +1008,7 @@ def test_quality_score_matches_python_reference(spark, texts):
     df = spark.createDataFrame(list(enumerate(texts)), "id long, s string")
     rows = {r.id: r for r in quality_score(df, "id", "s").collect()}
     for i, t in enumerate(texts):
-        toks = _py_tokens(t)
+        toks = py_tokens(t)
         n_chars = len(t)
         n_tokens = len(toks)
         n_punct = sum(not (c.isalnum() and c.isascii()) and c != " " for c in t)
@@ -1118,7 +1101,7 @@ def test_token_stats_matches_python_reference(spark, texts):
         for r in token_stats(df, "id", "s").collect()
     }
     want = {
-        i: (len(_py_tokens(t)), len(re.findall(BPE_ISH_REGEX, t)), len(t))
+        i: (len(py_tokens(t)), len(re.findall(BPE_ISH_REGEX, t)), len(t))
         for i, t in enumerate(texts)
     }
     assert got == want
@@ -1145,7 +1128,7 @@ def test_lm_score_matches_python_reference(spark, texts):
     c2: Counter = Counter()
     doc_bigrams = {}
     for i, t in enumerate(texts):
-        toks = _py_tokens(t)
+        toks = py_tokens(t)
         bgs = list(zip(toks, toks[1:]))
         doc_bigrams[i] = bgs
         c2.update(bgs)

@@ -18,6 +18,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from hdp_tez_spark.extensions.analytics import behavior_entropy
 from hdp_tez_spark.extensions.experiments import label_noise, power_analysis
 from hdp_tez_spark.extensions.textstats import readability_scores, vocab_growth
+from tests.conftest import py_tokens
 
 SETTINGS = dict(
     max_examples=8,
@@ -26,10 +27,6 @@ SETTINGS = dict(
 )
 
 WORDS = ["cat", "beautiful", "xyz", "grr", "onomatopoeia", "a", "I99"]
-
-
-def _py_tokens(text: str) -> list[str]:
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
 
 
 @given(
@@ -46,7 +43,7 @@ def test_readability_matches_re_reference(spark, docs, term):
     df = spark.createDataFrame(rows, "id long, text string")
     got = {r.id: r for r in readability_scores(df, "id", "text").collect()}
     for i, text in rows:
-        toks = _py_tokens(text)
+        toks = py_tokens(text)
         if not toks:
             assert i not in got
             continue
@@ -75,7 +72,7 @@ def test_vocab_growth_totals_match_set_reference(spark, docs):
     cum_tok = 0
     pts = []
     for _, text in rows:
-        toks = _py_tokens(text)
+        toks = py_tokens(text)
         cum_tok += len(toks)
         seen |= set(toks)
         if cum_tok and seen:

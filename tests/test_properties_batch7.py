@@ -20,6 +20,7 @@ from hdp_tez_spark.extensions.dedup import containment_pairs
 from hdp_tez_spark.extensions.ranking import ranking_eval
 from hdp_tez_spark.extensions.similarity import embedding_outliers
 from hdp_tez_spark.extensions.textstats import charclass_mix
+from tests.conftest import py_shingles
 
 SETTINGS = dict(
     max_examples=8,
@@ -184,14 +185,6 @@ words = st.lists(
 )
 
 
-def _shingle_set(tokens, k=3):
-    if len(tokens) >= k:
-        return {
-            " ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)
-        }
-    return {" ".join(tokens)}
-
-
 @given(ta=words, tb=words)
 @settings(**SETTINGS)
 def test_containment_matches_python_set_reference(spark, ta, tb):
@@ -204,7 +197,7 @@ def test_containment_matches_python_set_reference(spark, ta, tb):
             df, "doc_id", "text", k=3, threshold=0.0
         ).collect()
     }
-    sa, sb = _shingle_set(ta), _shingle_set(tb)
+    sa, sb = py_shingles(" ".join(ta), 3), py_shingles(" ".join(tb), 3)
     inter = len(sa & sb)
     if inter == 0:
         assert got == {}

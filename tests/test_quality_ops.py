@@ -71,10 +71,10 @@ def test_weighted_sample_biases_toward_heavy_rows(spark):
 
 def test_cms_never_undercounts_and_merges(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
-    from hdp_tez_spark.extensions.dedup import _tokens
+    from hdp_tez_spark.functions.text import tokenize
 
     toks = docs.select(
-        F.explode(_tokens(F.col("text"))).alias("word"), F.col("doc_id")
+        F.explode(tokenize(F.col("text"))).alias("word"), F.col("doc_id")
     )
     exact = toks.groupBy("word").agg(F.count(F.lit(1)).alias("exact"))
     sk = cms_build(toks, "word", d=3, w=128)

@@ -15,13 +15,13 @@ from __future__ import annotations
 
 import itertools
 import math
-import re
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import Row
 
 from hdp_tez_spark.extensions.dedup import duplicated_spans
 from hdp_tez_spark.extensions.similarity import semantic_dedup
+from tests.conftest import py_tokens, py_word_ngrams
 
 SETTINGS = dict(
     max_examples=5,
@@ -32,20 +32,8 @@ SETTINGS = dict(
 _VOCAB = "the cat sat mat dog ran big red".split()
 
 
-def _py_tokens(text: str) -> list[str]:
-    return [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
-
-
 def _py_duplicated_spans(texts: dict[int, str], window: int):
-    wins = {
-        i: [
-            " ".join(toks[j : j + window])
-            for j in range(len(toks) - window + 1)
-        ]
-        if len(toks := _py_tokens(t)) >= window
-        else []
-        for i, t in texts.items()
-    }
+    wins = {i: py_word_ngrams(py_tokens(t), window) for i, t in texts.items()}
     docs_per_window: dict[str, set[int]] = {}
     for i, ws in wins.items():
         for w in ws:

@@ -24,6 +24,14 @@ scale-killers at 100 TB even when sf0.01 results are correct:
                                  (the one-row-per-partition prefix-scan
                                  offsets, calendar-bounded series,
                                  LIMITed candidate lists).
+- repeated tokenizer           — the regex tokenizer `split(lower(...))`
+                                 inside a `lambdafunction` body (re-run
+                                 per array element) or more than once in
+                                 one operator, e.g. a `Project` or a
+                                 `Generate` (re-run per reference):
+                                 Catalyst does no CSE across lambda
+                                 bodies and only partial CSE within an
+                                 operator (functions/text.tokenize).
 
 This is the executable form of the per-operator plan audits VERDICT
 rounds 4-7 did by hand on the 5 most expensive queries — here it runs
@@ -190,6 +198,9 @@ GLOBAL_WINDOW_ALLOWED: dict[str, str] = {
 # partitioned, excluded by the lookbehind on the operator name.
 _GLOBAL_WINDOW_LINE = re.compile(r"(?<!GroupLimit )\bWindow \[")
 
+_LAMBDA = re.compile(r"lambdafunction\(")
+_TOKENIZER = re.compile(r"split\(lower\(")
+
 _PATTERNS = {
     "cartesian": re.compile(r"CartesianProduct"),
     "bnlj": re.compile(r"BroadcastNestedLoopJoin"),
@@ -217,11 +228,37 @@ def lint_plan(name: str, plan: str) -> list[str]:
             "partition-less Window (single-task global sort funnel) "
             "without a documented bounded input"
         )
+    findings.extend(_repeated_tokenizer(plan))
     return findings
 
 
-def _bracket_groups(s: str) -> list[str]:
-    """The top-level `[...]` groups of a plan line, nesting-aware.
+def _tokenizer_calls(s: str) -> int:
+    """Tokenizer splits in `s` that read an attribute (`#id`); the
+    auto-generated alias names that repeat an expression's text do not."""
+    return sum("#" in _paren_group(s[m.end() - 1 :]) for m in _TOKENIZER.finditer(s))
+
+
+def _paren_group(s: str) -> str:
+    return (_bracket_groups(s, "(", ")") or [""])[0]
+
+
+def _repeated_tokenizer(plan: str) -> list[str]:
+    lines = plan.splitlines()
+    found = []
+    if any(
+        _tokenizer_calls(_paren_group(line[m.start() :]))
+        for line in lines
+        for m in _LAMBDA.finditer(line)
+    ):
+        found.append("tokenizer split inside a lambdafunction body")
+    if any(_tokenizer_calls(line) > 1 for line in lines):
+        found.append("tokenizer split evaluated more than once in one operator")
+    return found
+
+
+def _bracket_groups(s: str, open_: str = "[", close: str = "]") -> list[str]:
+    """The top-level `[...]` (or `open_`...`close`) groups of a plan
+    line, nesting-aware.
 
     The old `], [` separator count miscounted when the window's
     aggregate-expression list itself contained nested `], [` (array
@@ -232,11 +269,11 @@ def _bracket_groups(s: str) -> list[str]:
     """
     groups, depth, start = [], 0, -1
     for pos, ch in enumerate(s):
-        if ch == "[":
+        if ch == open_:
             if depth == 0:
                 start = pos
             depth += 1
-        elif ch == "]" and depth:
+        elif ch == close and depth:
             depth -= 1
             if depth == 0:
                 groups.append(s[start + 1 : pos])
