@@ -15,27 +15,12 @@ import json
 import os
 import re
 import sys
-import time
-import warnings
-
-# The pandas FutureWarning about all-NA concat fires inside PySpark's
-# Arrow serializers in the PYTHON WORKER processes, so a driver-side
-# filter alone can't catch it — workers inherit PYTHONWARNINGS from the
-# driver env, which must be set BEFORE the JVM/session starts. Keeps the
-# driver's 2000-char stdout/stderr capture free of warning spam ahead of
-# the one JSON metric line this script exists to print.
-warnings.filterwarnings("ignore", category=FutureWarning)
-_pw = os.environ.get("PYTHONWARNINGS", "")
-if "ignore::FutureWarning" not in _pw:
-    os.environ["PYTHONWARNINGS"] = (
-        _pw + ("," if _pw else "") + "ignore::FutureWarning"
-    )
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from hdp_tez_spark.metrics import TaskMetricsCollector, dump_query_profile
-from hdp_tez_spark.session import get_session, warm_up
+from hdp_tez_spark.metrics import TaskMetricsCollector
+from tools.measure import open_session, run, sf_dir, write_artifact
 
 # Headline set: one per operator family (SURVEY §2) + the TPC-H-ish bench
 # queries. Kept in sync with _REGISTRY as coverage widens.
@@ -310,14 +295,38 @@ HEADLINE = [
 _CORE_N = 28
 
 
+# The r08 operators that joined the per-round medians protocol
+# (BENCH_NOTES) after their introduction round; every headline query from
+# r09 on (rolling_median onwards) joined it when added.
+_R08_STANDING = [
+    "skyline",
+    "mmr_select",
+    "assoc_rules",
+    "peak_concurrency",
+    "dup_spans",
+    "semantic_dedup",
+    "minhash_recall",
+]
+
+
+def standing_set() -> list[str]:
+    """The standing medians set: core-28 plus the per-round adds, so the
+    steady-state trend stays comparable across rounds. BENCH_PROFILE.json
+    keeps stage timelines for these queries only."""
+    return (
+        HEADLINE[:_CORE_N]
+        + _R08_STANDING
+        + HEADLINE[HEADLINE.index("rolling_median") :]
+    )
+
+
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
+    data = sf_dir()
+    m = re.search(r"sf([0-9.]+)", data)
     sf = float(m.group(1)) if m else -1.0
 
-    spark = get_session("hdp-tez-spark-bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = open_session("hdp-tez-spark-bench")
+    cores = spark.sparkContext.defaultParallelism
 
     qs = entry_mod.queries()
     names = [n for n in HEADLINE if n in qs]
@@ -331,12 +340,15 @@ def main() -> None:
         want = {n.strip() for n in only.split(",") if n.strip()}
         names = [n for n in names if n in want]
 
-    # Warm up the JVM/codegen paths once (excluded from timings).
-    warm_up(spark)
-    qs[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
     collector = TaskMetricsCollector(spark)
+    # Warm up the JVM/codegen paths once (excluded from timings; the timed
+    # run of the same query overwrites its counters and stage rows).
+    run(spark, collector, names[0], lambda: qs[names[0]](spark, data))
+
     timings: dict[str, float] = {}
+    exec_ms: dict[str, int] = {}
+    cpu_ms: dict[str, int] = {}
+    counters: dict[str, dict[str, int]] = {}
     # r11 (VERDICT r10 task #1): the single-shot wall-clock headline is
     # hostage to the documented host throttle band (BENCH_NOTES r07-r10:
     # swings 3x within minutes, 27 phantom "regressions" on untouched
@@ -350,26 +362,24 @@ def main() -> None:
     #     wall-clock.
     core_reps: dict[str, list[float]] = {}
     for i, name in enumerate(names):
-        # time the action alone — counter snapshots (status-store polling)
-        # happen outside the measured window so they don't tax small queries
-        def act(qname: str = name) -> None:
-            t0 = time.time()
-            qs[qname](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[qname] = round(time.time() - t0, 3)
 
-        collector.measure(name, act)
+        def build(q: str = name):
+            return qs[q](spark, data)
+
+        rec = run(spark, collector, name, build)
+        timings[name] = round(rec["wall_s"], 3)
+        exec_ms[name] = rec["exec_ms"]
+        cpu_ms[name] = rec["cpu_ms"]
+        # shuffle_bytes = read side; spill = memory+disk (BASELINE §C)
+        counters[name] = {
+            "shuffle_bytes": rec["shuffle_read_bytes"],
+            "spilled_bytes": rec["spill_bytes"],
+        }
         if name in HEADLINE[:_CORE_N]:
-            core_reps[name] = [timings[name]]
-            for r in (1, 2):
-
-                def rep(qname: str = name) -> None:
-                    t0 = time.time()
-                    qs[qname](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    core_reps[qname].append(round(time.time() - t0, 3))
-
-                collector.measure(f"{name}#rep{r}", rep)
+            core_reps[name] = [timings[name]] + [
+                round(run(spark, collector, f"{name}#rep{r}", build)["wall_s"], 3)
+                for r in (1, 2)
+            ]
         # Between queries (outside the timed window): drop Python-side
         # DataFrame/RDD references and force one JVM GC so ContextCleaner
         # releases localCheckpoint + broadcast blocks — without this, state
@@ -380,71 +390,49 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
 
     total = round(sum(timings.values()), 3)
-    # per-query shuffle/spill bytes (BASELINE §C: byte counters via the
-    # status store) — shuffle_bytes = read side; spill = memory+disk.
-    # Written to a SIDECAR file, not stdout: the driver captures only the
-    # tail of stdout and must find the one short JSON line below intact
-    # (round 2's inline counters pushed the line past the capture window
-    # and the driver recorded parsed=null).
-    counters = {
-        name: {
-            "shuffle_bytes": c["shuffle_read_bytes"],
-            "spilled_bytes": c["memory_spill_bytes"] + c["disk_spill_bytes"],
-        }
-        for name, c in collector.counters.items()
-        if "#rep" not in name  # keep the sidecar single-shot-shaped
-    }
+    # Counters, full timings and stage timelines go to SIDECAR files, not
+    # stdout: the driver captures only the tail of stdout and must find
+    # the one short JSON line below intact (round 2's inline counters
+    # pushed the line past the capture window and the driver recorded
+    # parsed=null).
     here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_COUNTERS.json"), "w") as f:
-        json.dump({"sf": sf, "counters": counters}, f, indent=1)
-    # Full per-query timings live in a sidecar (same treatment as the
-    # counters): the stdout line below must stay short enough to survive
-    # the driver's stdout-tail capture intact.
-    exec_ms = {
-        name: c["executor_run_ms"]
-        for name, c in collector.counters.items()
-        if "#rep" not in name
-    }
-    with open(os.path.join(here, "BENCH_TIMINGS.json"), "w") as f:
-        json.dump(
-            {
-                "sf": sf,
-                "total_sec": total,
-                "queries": timings,
-                "exec_ms": exec_ms,
-                "core28_reps": core_reps,
-            },
-            f,
-            indent=1,
-        )
+
+    def sidecar(file: str, payload: dict) -> None:
+        write_artifact(os.path.join(here, file), payload, cores=cores, sf=sf)
+
+    sidecar("BENCH_COUNTERS.json", {"counters": counters})
+    sidecar(
+        "BENCH_TIMINGS.json",
+        {
+            "total_sec": total,
+            "queries": timings,
+            "exec_ms": exec_ms,
+            "cpu_ms": cpu_ms,
+            "core28_reps": core_reps,
+        },
+    )
     # Per-query stage timeline (swimlane/ATS history parity): every
     # stage's submission/first-task/completion timestamps + byte
-    # counters. Retention is capped to the standing medians set
-    # (core-28 + per-round adds) so the artifact stays bounded and
-    # round-comparable rather than growing with the whole registry.
-    from tools.reps import standing_set
-
-    dump_query_profile(
-        collector,
-        os.path.join(here, "BENCH_PROFILE.json"),
-        only=standing_set(),
+    # counters. Retention is capped to the standing medians set so the
+    # artifact stays bounded and round-comparable rather than growing
+    # with the whole registry.
+    keep = set(standing_set())
+    sidecar(
+        "BENCH_PROFILE.json",
+        {n: rows for n, rows in collector.profile().items() if n in keep},
     )
 
     core = [n for n in HEADLINE[:_CORE_N] if n in timings]
-    # load-independent companion to the wall-clock total: executor task
-    # time summed over the first (single-shot) execution of every query —
-    # medians/extra reps excluded so the number covers exactly the same
-    # work as "value"
-    exec_ms_total = sum(
-        collector.counters[n]["executor_run_ms"]
-        for n in timings
-        if n in collector.counters
-    )
     meds = {
         n: round(sorted(rs)[len(rs) // 2], 3)
         for n, rs in core_reps.items()
         if rs
     }
+    # exec_ms_total / cpu_ms_total: executor-side companions to the
+    # wall-clock total (CPU time is the one that does not grow with host
+    # load), summed over the first (single-shot) execution of every
+    # query — extra reps excluded so they cover exactly the same work as
+    # "value"
     line = json.dumps(
         {
             "metric": "headline_query_set_wall_clock",
@@ -452,7 +440,8 @@ def main() -> None:
             "unit": "sec",
             "queries": {n: timings[n] for n in core},
             "queries_med": {n: meds[n] for n in core if n in meds},
-            "exec_ms_total": exec_ms_total,
+            "exec_ms_total": sum(exec_ms.values()),
+            "cpu_ms_total": sum(cpu_ms.values()),
             "n_queries": len(timings),
             "sf": sf,
         },

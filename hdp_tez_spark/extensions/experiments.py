@@ -2242,7 +2242,10 @@ def cramers_v(
         ).alias("__q"),
     )
     n = F.col("__n")
-    chi2 = n * (F.col("__q") - 1)
+    # an independent table has Σ = 1 exactly, but summing non-dyadic
+    # ratios (1/3 + 1/3 + 1/6 + 1/6) can land one ulp below it: without
+    # the floor χ² reads -0.0 and V = sqrt(negative) = NaN
+    chi2 = F.greatest(n * (F.col("__q") - 1), F.lit(0.0))
     mindim = F.least(F.col("__ra"), F.col("__cb")) - 1
     return red.select(
         n.alias("n"),

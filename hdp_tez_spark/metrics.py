@@ -99,6 +99,8 @@ class TaskMetricsCollector:
         "memoryBytesSpilled": "memory_spill_bytes",  # SPILLED_RECORDS (:57)
         "diskBytesSpilled": "disk_spill_bytes",    # ADDITIONAL_SPILLS_BYTES_*
         "executorRunTime": "executor_run_ms",
+        "executorCpuTime": "executor_cpu_ns",      # CPU_MILLISECONDS
+        "jvmGcTime": "jvm_gc_ms",                  # GC_TIME_MILLIS
         "numCompleteTasks": "tasks_completed",
     }
 
@@ -230,26 +232,15 @@ class TaskMetricsCollector:
         return self.stage_rows
 
 
-def dump_query_profile(
-    collector: TaskMetricsCollector, path: str, only=None
-) -> None:
+def dump_query_profile(collector: TaskMetricsCollector, path: str) -> None:
     """Write the collector's per-query stage-timeline profile as JSON —
     history/ATS observability parity (`tez-plugins/tez-yarn-timeline-*`,
     `tez-tools/swimlanes/` render the same per-vertex timeline from YARN
-    ATS events; here it is a file any engine can re-load and query).
-
-    `only` (optional iterable of query names) caps retention to a fixed
-    subset — bench.py passes the standing medians set so the committed
-    artifact stays a bounded, round-comparable size instead of growing
-    with every registry addition (it hit 51k lines mid-r09)."""
+    ATS events; here it is a file any engine can re-load and query)."""
     import json
 
-    prof = collector.profile()
-    if only is not None:
-        keep = set(only)
-        prof = {k: v for k, v in prof.items() if k in keep}
     with open(path, "w") as f:
-        json.dump(prof, f, indent=1)
+        json.dump(collector.profile(), f, indent=1)
 
 
 # Mapping of the reference's TaskCounter names (TaskCounter.java:28-202) to

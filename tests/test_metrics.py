@@ -93,6 +93,8 @@ def test_stage_timeline_profile_and_dump(spark, tmp_path):
     for r in rows:
         assert r["status"] in ("COMPLETE", "SKIPPED", "FAILED")
         assert "shuffle_read_bytes" in r and "executor_run_ms" in r
+        assert "executor_cpu_ns" in r and "jvm_gc_ms" in r
+    assert tm.counters["prof_q"]["executor_cpu_ns"] > 0
     # a SKIPPED stage legitimately has no timestamps; COMPLETE ones must
     complete = [r for r in rows if r["status"] == "COMPLETE"]
     assert len(complete) >= 2
@@ -112,3 +114,49 @@ def test_stage_timeline_profile_and_dump(spark, tmp_path):
     loaded = json.loads(out.read_text())
     assert set(loaded) == {"prof_q"}
     assert loaded["prof_q"][0]["stage_id"] == rows[0]["stage_id"]
+
+
+def test_measure_run_splits_phases(spark):
+    """tools/measure.run: wall_s is exactly construct + action, executor
+    CPU is counted, and jobs launched while the DataFrame is built (the
+    k_core lineage cuts) land in the construct phase. The collector keeps
+    each run under its query name."""
+    import __spark_entry__ as entry_mod
+    from hdp_tez_spark.metrics import TaskMetricsCollector
+    from tools.measure import run
+
+    qs = entry_mod.queries()
+    tm = TaskMetricsCollector(spark)
+    wc = run(spark, tm, "wordcount", lambda: qs["wordcount"](spark, SF_SMOKE))
+    assert wc["wall_s"] == wc["construct_s"] + wc["action_s"]
+    assert wc["cpu_ms"] > 0 and wc["plan_s"] > 0
+    kc = run(spark, tm, "k_core", lambda: qs["k_core"](spark, SF_SMOKE))
+    assert kc["construct_jobs"] > 0
+    assert set(tm.counters) == set(tm.profile()) == {"wordcount", "k_core"}
+
+
+def test_write_artifact_keeps_other_settings(tmp_path):
+    """A bench sidecar records cores/sf/HEAD, overwrites a file from the
+    same settings, and never overwrites one from other (or unrecorded)
+    settings: it writes <stem>_c{cores}_sf{sf}.json beside it."""
+    import json
+
+    from tools.measure import write_artifact
+
+    path = str(tmp_path / "BENCH_TIMINGS.json")
+    assert write_artifact(path, {"total_sec": 1.0}, cores=32, sf=0.1) == path
+    assert write_artifact(path, {"total_sec": 2.0}, cores=32, sf=0.1) == path
+    doc = json.loads(open(path).read())
+    assert (doc["cores"], doc["sf"], doc["total_sec"]) == (32, 0.1, 2.0)
+    assert doc["head"]
+
+    other = write_artifact(path, {"total_sec": 3.0}, cores=8, sf=0.1)
+    assert other == str(tmp_path / "BENCH_TIMINGS_c8_sf0.1.json")
+    assert json.loads(open(path).read())["total_sec"] == 2.0
+    assert json.loads(open(other).read())["cores"] == 8
+
+    legacy = tmp_path / "BENCH_PROFILE.json"
+    legacy.write_text('{"q": []}')
+    written = write_artifact(str(legacy), {"q": [1]}, cores=4, sf=0.01)
+    assert written == str(tmp_path / "BENCH_PROFILE_c4_sf0.01.json")
+    assert json.loads(legacy.read_text()) == {"q": []}

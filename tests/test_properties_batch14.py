@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from hdp_tez_spark.extensions.experiments import (
     anova_oneway,
@@ -66,6 +66,10 @@ def test_anova_matches_mean_decomposition(spark, rows):
         min_size=2,
         max_size=40,
     )
+)
+# independent table whose Σ o²/(rt·ct) sums to one ulp below 1
+@example(
+    rows=[("a", "x"), ("a", "x"), ("a", "y"), ("a", "y"), ("b", "x"), ("b", "y")]
 )
 @settings(**SETTINGS)
 def test_cramers_v_matches_dense_grid(spark, rows):

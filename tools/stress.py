@@ -28,17 +28,15 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from hdp_tez_spark.metrics import TaskMetricsCollector
-from hdp_tez_spark.session import get_session, warm_up
 from hdp_tez_spark.sources.catalog import load_table
+from tools.measure import open_session, run, sf_dir
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 FACTOR = int(os.environ.get("SPARK_GRAFT_STRESS_FACTOR", "20"))
 
 
@@ -53,30 +51,24 @@ def inflate(df, key_cols: list[str], factor: int):
 
 
 def main() -> None:
-    spark = get_session("hdp-tez-spark-stress")
-    spark.sparkContext.setLogLevel("ERROR")
-    warm_up(spark)
+    data = sf_dir()
+    spark = open_session("hdp-tez-spark-stress")
 
-    li = load_table(spark, SF_DIR, "lineitem")
-    orders = load_table(spark, SF_DIR, "orders")
+    li = load_table(spark, data, "lineitem")
+    orders = load_table(spark, data, "orders")
     big_li = inflate(li, ["l_orderkey"], FACTOR)
     big_orders = inflate(orders, ["o_orderkey"], FACTOR)
 
     collector = TaskMetricsCollector(spark)
     results: dict[str, dict] = {}
 
-    def run(name: str, action) -> None:
-        def act():
-            t0 = time.time()
-            action()
-            results[name] = {"sec": round(time.time() - t0, 2)}
-
-        collector.measure(name, act)
-        c = collector.counters[name]
-        results[name]["shuffle_mb"] = round(c["shuffle_read_bytes"] / 1e6, 1)
-        results[name]["spill_mb"] = round(
-            (c["memory_spill_bytes"] + c["disk_spill_bytes"]) / 1e6, 1
-        )
+    def shape(name: str, build) -> None:
+        rec = run(spark, collector, name, build)
+        results[name] = {
+            "sec": round(rec["wall_s"], 2),
+            "shuffle_mb": round(rec["shuffle_read_bytes"] / 1e6, 1),
+            "spill_mb": round(rec["spill_bytes"] / 1e6, 1),
+        }
         print(json.dumps({"op": name, "factor": FACTOR, **results[name]}))
 
     n_rows = big_li.count()
@@ -84,7 +76,7 @@ def main() -> None:
 
     # 1. map-side-combined aggregation (tpch_q1 shape): shuffle must stay
     #    |groups|-sized however many rows go in
-    run(
+    shape(
         "group_agg_combine",
         lambda: big_li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -92,8 +84,7 @@ def main() -> None:
             F.sum("l_extendedprice"),
             F.avg("l_discount"),
             F.count(F.lit(1)),
-        )
-        .write.format("noop").mode("overwrite").save(),
+        ),
     )
 
     # 2. fact-fact sort-merge join at inflated key cardinality: the
@@ -101,25 +92,22 @@ def main() -> None:
     #    MERGE hint pinned: in-plan explode defeats Catalyst's size
     #    estimation (it would broadcast a 3M-row "dim"); on a real
     #    cluster AQE sizes from actual shuffle stats and picks SMJ itself
-    run(
+    shape(
         "fact_join",
         lambda: big_li.hint("merge").join(
             big_orders, big_li.l_orderkey == big_orders.o_orderkey
         )
         .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)))
-        .write.format("noop").mode("overwrite").save(),
+        .agg(F.count(F.lit(1))),
     )
 
     # 3. exact quantiles: shuffle O(|distinct|) — inflation duplicates
     #    values, so distinct stays ~constant and so should the shuffle
     from hdp_tez_spark.extensions.analytics import exact_quantiles
 
-    run(
+    shape(
         "exact_quantiles",
-        lambda: exact_quantiles(
-            big_li, "l_extendedprice", [0.5, 0.95, 0.99]
-        ).write.format("noop").mode("overwrite").save(),
+        lambda: exact_quantiles(big_li, "l_extendedprice", [0.5, 0.95, 0.99]),
     )
 
     # 4. keyed window rank over the full fact table: the row-shaped hash
@@ -127,20 +115,18 @@ def main() -> None:
     from pyspark.sql import Window
 
     w = Window.partitionBy("l_partkey").orderBy(F.desc("l_extendedprice"))
-    run(
+    shape(
         "window_topk_per_key",
         lambda: big_li.select("l_partkey", "l_extendedprice")
         .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .write.format("noop").mode("overwrite").save(),
+        .where(F.col("rn") <= 3),
     )
 
     # 5. global top-k: must compile to per-task heaps, not a global sort
-    run(
+    shape(
         "topk",
         lambda: big_li.orderBy(F.desc("l_extendedprice"))
-        .limit(100)
-        .write.format("noop").mode("overwrite").save(),
+        .limit(100),
     )
 
     # 6. Poisson bootstrap: pure expression-heavy map + 1-row aggregate —
@@ -148,26 +134,24 @@ def main() -> None:
     #    constant-size shuffle (b partial rows per partition)
     from hdp_tez_spark.extensions.experiments import bootstrap_ci
 
-    run(
+    shape(
         "bootstrap_map",
-        lambda: bootstrap_ci(big_orders, "o_orderkey", "o_totalprice", b=32)
-        .write.format("noop").mode("overwrite").save(),
+        lambda: bootstrap_ci(big_orders, "o_orderkey", "o_totalprice", b=32),
     )
 
     # 7. BPE merge training on an inflated corpus: the corpus pass scales
     #    with rows, but every merge round is VOCAB-sized — inflation
     #    replicates documents, so the vocabulary (and thus per-round cost)
     #    stays constant; the factor shows up once, not once per round
-    docs = load_table(spark, SF_DIR, "documents")
+    docs = load_table(spark, data, "documents")
     big_docs = docs.select("text").crossJoin(
         spark.range(FACTOR).select(F.col("id").alias("__r"))
     )
     from hdp_tez_spark.extensions.textstats import bpe_merges
 
-    run(
+    shape(
         "bpe_train",
-        lambda: bpe_merges(big_docs, "text", n_merges=4)
-        .write.format("noop").mode("overwrite").save(),
+        lambda: bpe_merges(big_docs, "text", n_merges=4),
     )
 
     # importance sampling at 20x: ONE md5 draw + one pow per row against
@@ -179,10 +163,9 @@ def main() -> None:
         F.col("o_orderkey").alias("id"),
         F.col("o_totalprice").cast("double").alias("score"),
     )
-    run(
+    shape(
         "importance_sample",
-        lambda: importance_sample(big_scored, "id", "score", 2.0, 0.1)
-        .write.format("noop").mode("overwrite").save(),
+        lambda: importance_sample(big_scored, "id", "score", 2.0, 0.1),
     )
 
     total = round(sum(r["sec"] for r in results.values()), 2)
