@@ -31,9 +31,9 @@ tokenize/signature pass runs once instead of once per downstream
 subtree. Consequences for callers: CONSTRUCTING one of these
 DataFrames runs Spark jobs and pins executor blocks even if the
 result is never acted on, and the default `localCheckpoint` cut is
-not fault-tolerant — configure `sc.setCheckpointDir` (or pass
-`checkpoint_dir` where exposed) on a real cluster to upgrade every
-cut to a reliable checkpoint (see plans/checkpoints.py).
+not fault-tolerant — set the context's checkpoint dir
+(`spark.checkpoint.dir` / `sc.setCheckpointDir`) on a real cluster to
+upgrade every cut to a reliable checkpoint (see plans/checkpoints.py).
 """
 
 from __future__ import annotations
@@ -131,7 +131,6 @@ def _hash_arrays(
     id_col: str,
     text_col: str,
     k: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(doc, __hs: array<long>) — per-doc DISTINCT shingle md5-hashes,
     tokenized once and cut (eager-at-construction, like every
@@ -145,8 +144,7 @@ def _hash_arrays(
         _spread(df.select(id_col, text_col)).select(
             F.col(id_col).alias("doc"),
             F.transform(_shingles(F.col(text_col), k), _md5_long).alias("__hs"),
-        ),
-        checkpoint_dir,
+        )
     )
 
 
@@ -217,7 +215,6 @@ def prefix_filter_join(
     text_col: str,
     threshold: float = 0.6,
     k: int = 1,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact set-Jaccard join with PPJoin-style prefix filtering over
     word-k-gram shingle sets (k=1 -> plain token sets).
@@ -254,10 +251,9 @@ def prefix_filter_join(
     # two consumers (frequency table, rank pass) — without this the
     # corpus is re-tokenized once per use.
     # Materializing the (doc, token-hash) table once is the standard
-    # PPJoin layout; `checkpoint_dir` (or a SparkContext-configured
-    # checkpoint dir) upgrades the cut to a reliable checkpoint on a
-    # real cluster (plans/checkpoints.py).
-    toks = truncate_lineage(toks, checkpoint_dir)
+    # PPJoin layout; a SparkContext checkpoint dir upgrades the cut to
+    # a reliable checkpoint on a real cluster (plans/checkpoints.py).
+    toks = truncate_lineage(toks)
     # global document frequency -> canonical rarest-first order (df, tok)
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
     w = Window.partitionBy("doc").orderBy("__df", "tok")
@@ -275,7 +271,7 @@ def prefix_filter_join(
     # join+window pass runs once. The cut preserves the window's
     # hashpartitioning(doc), so the collect_list groupBy below needs no
     # exchange of its own.
-    ranked = truncate_lineage(ranked, checkpoint_dir)
+    ranked = truncate_lineage(ranked)
     # prefix length p = n - ceil(t*n) + 1
     prefixes = ranked.where(
         F.col("__pos")
@@ -724,7 +720,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
     on_round=None,
 ) -> DataFrame:
     """(node, label) for every node in `edges`, where label is the minimum
@@ -770,9 +765,9 @@ def connected_components(
     star op emits at most one edge per input edge plus one per node),
     and the per-round lineage cut goes through LoopCheckpointer — NOT
     chained truncate_lineage, whose cost grows geometrically with chain
-    depth (plans/checkpoints.py). `localCheckpoint` by default; pass
-    `checkpoint_dir` (or configure one on the SparkContext) for
-    reliable checkpoints that survive executor loss.
+    depth (plans/checkpoints.py). `localCheckpoint` by default; a
+    SparkContext checkpoint dir gives reliable checkpoints that survive
+    executor loss.
 
     `on_round(i, pending)` (optional) is called after each round with
     the number of non-star edges remaining — production loop
@@ -796,95 +791,91 @@ def connected_components(
     raw = truncate_lineage(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
             F.col("u") != F.col("v")
-        ),
-        checkpoint_dir,
+        )
     )
     nodes = truncate_lineage(
         raw.select(F.col("u").alias("node"))
         .unionAll(raw.select(F.col("v").alias("node")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     e = truncate_lineage(
         raw.select(
             F.greatest("u", "v").alias("child"),
             F.least("u", "v").alias("parent"),
-        ).distinct(),
-        checkpoint_dir,
+        ).distinct()
     )
-    lc = LoopCheckpointer(e.sparkSession, checkpoint_dir, "cc")
-    pending = -1
-    for i in range(max_iter):
-        # large-star: for each node a, m = min(neighborhood(a) + {a});
-        # hook every neighbor b > a to m. Output edges keep the strict
-        # child > parent orientation (b > a >= m).
-        sym = e.unionAll(
-            e.select(F.col("parent").alias("child"), F.col("child").alias("parent"))
-        ).toDF("a", "b")
-        lmin = sym.groupBy("a").agg(
-            F.least(F.min("b"), F.col("a")).alias("m")
-        )
-        large = (
-            sym.where(F.col("b") > F.col("a"))
-            .join(lmin, "a")
-            .select(F.col("b").alias("child"), F.col("m").alias("parent"))
-            .distinct()
-        )
-        # small-star: key each edge by its larger endpoint (already the
-        # orientation `large` emits); hook the smaller neighbors and the
-        # key itself to the minimum. child > parent is preserved
-        # (parent != m and m = min(parents) => parent > m; child > m).
-        smin = large.groupBy("child").agg(F.min("parent").alias("m"))
-        small = (
-            large.join(smin, "child")
-            .where(F.col("parent") != F.col("m"))
-            .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
-            .unionAll(smin.select("child", F.col("m").alias("parent")))
-            .distinct()
-        )
-        # per-round cut through LoopCheckpointer, NOT truncate_lineage:
-        # chained Dataset checkpoints get geometrically slower with
-        # chain depth (plans/checkpoints.py)
-        e = lc.cut(small)
-        # exact fixpoint test: a star forest has (a) no node that is
-        # both a parent and a child and (b) exactly one parent per
-        # child; both star ops preserve connectivity and keep
-        # child > parent, so star forest == converged components with
-        # each star's root the component minimum. (b) is not implied by
-        # (a): a depth-1 edge set can still hold {(c,p1),(c,p2)} whose
-        # roots were never merged — see docstring. One job: left-join
-        # parents against the distinct child set, then a single-row
-        # aggregate counting both violation classes.
-        kids = e.select(F.col("child").alias("__k")).distinct()
-        stats = (
-            e.join(kids, e.parent == F.col("__k"), "left")
-            .agg(
-                F.count(F.lit(1)).alias("__total"),
-                F.count_distinct(F.col("child")).alias("__nchild"),
-                F.count(F.col("__k")).alias("__badp"),
+    with LoopCheckpointer(e.sparkSession, "cc") as lc:
+        pending = -1
+        for i in range(max_iter):
+            # large-star: for each node a, m = min(neighborhood(a) + {a});
+            # hook every neighbor b > a to m. Output edges keep the strict
+            # child > parent orientation (b > a >= m).
+            sym = e.unionAll(
+                e.select(F.col("parent").alias("child"), F.col("child").alias("parent"))
+            ).toDF("a", "b")
+            lmin = sym.groupBy("a").agg(
+                F.least(F.min("b"), F.col("a")).alias("m")
             )
-            .first()
+            large = (
+                sym.where(F.col("b") > F.col("a"))
+                .join(lmin, "a")
+                .select(F.col("b").alias("child"), F.col("m").alias("parent"))
+                .distinct()
+            )
+            # small-star: key each edge by its larger endpoint (already the
+            # orientation `large` emits); hook the smaller neighbors and the
+            # key itself to the minimum. child > parent is preserved
+            # (parent != m and m = min(parents) => parent > m; child > m).
+            smin = large.groupBy("child").agg(F.min("parent").alias("m"))
+            small = (
+                large.join(smin, "child")
+                .where(F.col("parent") != F.col("m"))
+                .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
+                .unionAll(smin.select("child", F.col("m").alias("parent")))
+                .distinct()
+            )
+            # per-round cut through LoopCheckpointer, NOT truncate_lineage:
+            # chained Dataset checkpoints get geometrically slower with
+            # chain depth (plans/checkpoints.py)
+            e = lc.cut(small)
+            # exact fixpoint test: a star forest has (a) no node that is
+            # both a parent and a child and (b) exactly one parent per
+            # child; both star ops preserve connectivity and keep
+            # child > parent, so star forest == converged components with
+            # each star's root the component minimum. (b) is not implied by
+            # (a): a depth-1 edge set can still hold {(c,p1),(c,p2)} whose
+            # roots were never merged — see docstring. One job: left-join
+            # parents against the distinct child set, then a single-row
+            # aggregate counting both violation classes.
+            kids = e.select(F.col("child").alias("__k")).distinct()
+            stats = (
+                e.join(kids, e.parent == F.col("__k"), "left")
+                .agg(
+                    F.count(F.lit(1)).alias("__total"),
+                    F.count_distinct(F.col("child")).alias("__nchild"),
+                    F.count(F.col("__k")).alias("__badp"),
+                )
+                .first()
+            )
+            pending = stats["__badp"] + (stats["__total"] - stats["__nchild"])
+            if on_round is not None:
+                on_round(i, pending)
+            if pending == 0:
+                break
+        else:
+            # star trees were still collapsing when the round budget ran
+            # out. Returning the partial forest would hand callers wrong
+            # clusters — fail loudly instead. (With the star algorithm this
+            # means max_iter << log2(n), not a deep-diameter graph.)
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter={max_iter} "
+                f"rounds ({pending} non-star edges remain); rounds needed are "
+                f"O(log n) — raise max_iter"
+            )
+        labels = nodes.join(e, nodes.node == e.child, "left").select(
+            "node", F.coalesce("parent", F.col("node")).alias("label")
         )
-        pending = stats["__badp"] + (stats["__total"] - stats["__nchild"])
-        if on_round is not None:
-            on_round(i, pending)
-        if pending == 0:
-            break
-    else:
-        # star trees were still collapsing when the round budget ran
-        # out. Returning the partial forest would hand callers wrong
-        # clusters — fail loudly instead. (With the star algorithm this
-        # means max_iter << log2(n), not a deep-diameter graph.)
-        lc.cleanup()
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            f"rounds ({pending} non-star edges remain); rounds needed are "
-            f"O(log n) — raise max_iter"
-        )
-    labels = nodes.join(e, nodes.node == e.child, "left").select(
-        "node", F.coalesce("parent", F.col("node")).alias("label")
-    )
-    return lc.finish(labels)
+        return lc.finish(labels)
 
 
 def dedup_clusters(
@@ -1072,7 +1063,6 @@ def ngram_novelty(
     id_col: str,
     text_col: str,
     k: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-document n-gram novelty: the fraction of a document's
     distinct word k-gram shingles that appear in NO other document —
@@ -1108,7 +1098,7 @@ def ngram_novelty(
         )
         .select(F.col(id_col), _md5_long(F.col("__sh")).alias("__h"))
     )
-    sh = truncate_lineage(sh, checkpoint_dir)
+    sh = truncate_lineage(sh)
     # rows are distinct per (doc, shingle) — _shingles array_distincts
     # within the doc — so count(*) per hash IS docs-containing-shingle
     counts = sh.groupBy("__h").agg(F.count(F.lit(1)).alias("__nd"))
@@ -1143,7 +1133,6 @@ def duplicated_spans(
     id_col: str,
     text_col: str,
     window: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Substring-level duplicate-span detection — the distributed
     approximation of suffix-array substring dedup (Lee et al. 2022,
@@ -1185,7 +1174,7 @@ def duplicated_spans(
             F.col(id_col), _md5_long(ngram_text(F.col("__w"), window)).alias("__h")
         )
     )
-    wins = truncate_lineage(wins, checkpoint_dir)
+    wins = truncate_lineage(wins)
     dup_hashes = (
         wins.groupBy("__h")
         .agg(F.count_distinct(F.col(id_col)).alias("__nd"))

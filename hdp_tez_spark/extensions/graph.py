@@ -17,11 +17,10 @@ Scale shape per iteration:
   one row per (dst) per map partition, not one per edge);
 - every round's lineage is truncated through
   `plans.checkpoints.truncate_lineage`: `localCheckpoint` by default
-  (sandbox-fast), upgraded to a reliable `checkpoint` when the operator
-  is given a `checkpoint_dir` or the SparkContext has one configured —
-  executor loss under localCheckpoint forces a full job restart, so a
-  real cluster should always set the dir (same note as
-  connected_components).
+  (sandbox-fast), upgraded to a reliable `checkpoint` when the
+  SparkContext has a checkpoint dir — executor loss under
+  localCheckpoint forces a full job restart, so a real cluster should
+  always set the dir (same note as connected_components).
 """
 
 from __future__ import annotations
@@ -40,7 +39,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank with `iters` synchronous iterations over a directed edge
     list (duplicate edges count once — dedup upstream if needed).
@@ -57,8 +55,8 @@ def pagerank(
     The scalar N rides as a 1-row cross join — never collected; the
     per-round plan is two joins + one partial-aggregated groupBy, and
     a per-round lineage cut keeps round i's plan independent of round
-    i-1 (`checkpoint_dir` upgrades it to a reliable checkpoint — see
-    plans/checkpoints.py).
+    i-1 (a SparkContext checkpoint dir upgrades it to a reliable
+    checkpoint — see plans/checkpoints.py).
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
@@ -69,21 +67,20 @@ def pagerank(
     # running 3x per call at sf0.1 before r10; same fix as
     # connected_components)
     e = truncate_lineage(
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        checkpoint_dir,
+        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
     )
     nodes = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
         .distinct()
     )
-    nodes = truncate_lineage(nodes, checkpoint_dir)
+    nodes = truncate_lineage(nodes)
     n_df = nodes.groupBy().agg(F.count(F.lit(1)).alias("__n"))
     outdeg = e.groupBy("__src").agg(F.count(F.lit(1)).alias("__od"))
     # degrees never change across rounds: pre-join them onto the edges once
     # (keeping __od as a column, so each round still computes rank/__od —
     # bit-identical arithmetic to joining outdeg per round)
-    ew = truncate_lineage(e.join(outdeg, "__src"), checkpoint_dir)
+    ew = truncate_lineage(e.join(outdeg, "__src"))
 
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank")
@@ -91,30 +88,30 @@ def pagerank(
     # per-round cuts via LoopCheckpointer: chained Dataset checkpoints
     # get geometrically slower with chain depth (plans/checkpoints.py);
     # a 30-iteration PageRank would walk straight into it
-    lc = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "pagerank")
-    for _ in range(iters):
-        contribs = (
-            ew.join(ranks, ew["__src"] == ranks["node"])
-            .select(
-                F.col("__dst").alias("node"),
-                (F.col("rank") / F.col("__od")).alias("__c"),
+    with LoopCheckpointer(edges.sparkSession, "pagerank") as lc:
+        for _ in range(iters):
+            contribs = (
+                ew.join(ranks, ew["__src"] == ranks["node"])
+                .select(
+                    F.col("__dst").alias("node"),
+                    (F.col("rank") / F.col("__od")).alias("__c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("__c").alias("__s"))
             )
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(n_df))
-            .select(
-                "node",
-                (
-                    (1.0 - damping) / F.col("__n")
-                    + damping * F.coalesce(F.col("__s"), F.lit(0.0))
-                ).alias("rank"),
+            ranks = (
+                nodes.join(contribs, "node", "left")
+                .crossJoin(F.broadcast(n_df))
+                .select(
+                    "node",
+                    (
+                        (1.0 - damping) / F.col("__n")
+                        + damping * F.coalesce(F.col("__s"), F.lit(0.0))
+                    ).alias("rank"),
+                )
             )
-        )
-        ranks = lc.cut(ranks)
-    ranks = lc.finish(ranks)
+            ranks = lc.cut(ranks)
+        ranks = lc.finish(ranks)
     return ranks.select("node", F.round("rank", 6).alias("rank")).orderBy("node")
 
 
@@ -124,7 +121,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop count from any source node, bounded
     by `max_hops`. Third iterative operator next to `pagerank` and
@@ -144,9 +140,9 @@ def bfs_distances(
       anti-join against the visited set, so the anti-join probes each
       candidate once however many in-edges it has;
     - the visited set is the only growing state, checkpointed per round
-      (`localCheckpoint` by default; pass `checkpoint_dir` or configure
-      one on the SparkContext for a reliable checkpoint on a real
-      cluster — same note as `pagerank`);
+      (`localCheckpoint` by default; configure a checkpoint dir on the
+      SparkContext for a reliable checkpoint on a real cluster — same
+      note as `pagerank`);
     - rounds with an empty frontier short-circuit via a cheap
       `observe`-free isEmpty (frontier row counts are bounded by |V|,
       and isEmpty only materializes one partition's first row).
@@ -155,35 +151,35 @@ def bfs_distances(
         raise ValueError("max_hops must be >= 0")
     e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")).distinct()
     if max_hops >= 1:
-        e = truncate_lineage(e, checkpoint_dir)  # scanned once per round
+        e = truncate_lineage(e)  # scanned once per round
     dist = truncate_lineage(
         sources.select(
             F.col(sources.columns[0]).alias("node"), F.lit(0).alias("dist")
-        ).distinct(),
-        checkpoint_dir,
+        ).distinct()
     )
     frontier = dist.select("node")
     # two cuts per round (frontier + visited set) — both through
     # LoopCheckpointer so deep traversals never hit the geometric
     # chained-checkpoint cost (plans/checkpoints.py)
-    lc_f = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "bfs-frontier")
-    lc_d = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "bfs-dist")
-    for hop in range(1, max_hops + 1):
-        if frontier.isEmpty():
-            break
-        nxt = (
-            frontier.join(e, frontier["node"] == e["__src"])
-            .select(F.col("__dst").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-        )
-        nxt = lc_f.cut(nxt)
-        dist = lc_d.cut(
-            dist.unionByName(nxt.select("node", F.lit(hop).alias("dist")))
-        )
-        frontier = nxt
-    lc_f.cleanup()
-    dist = lc_d.finish(dist)
+    with (
+        LoopCheckpointer(edges.sparkSession, "bfs-frontier") as lc_f,
+        LoopCheckpointer(edges.sparkSession, "bfs-dist") as lc_d,
+    ):
+        for hop in range(1, max_hops + 1):
+            if frontier.isEmpty():
+                break
+            nxt = (
+                frontier.join(e, frontier["node"] == e["__src"])
+                .select(F.col("__dst").alias("node"))
+                .distinct()
+                .join(dist.select("node"), "node", "left_anti")
+            )
+            nxt = lc_f.cut(nxt)
+            dist = lc_d.cut(
+                dist.unionByName(nxt.select("node", F.lit(hop).alias("dist")))
+            )
+            frontier = nxt
+        dist = lc_d.finish(dist)
     return dist.orderBy("node")
 
 
@@ -441,7 +437,6 @@ def label_propagation(
     a: str = "a",
     b: str = "b",
     iters: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label propagation community detection (Raghavan et
     al. '07) over an undirected edge list: every node starts with its
@@ -472,8 +467,7 @@ def label_propagation(
             F.least("__u", "__v").alias("__u"),
             F.greatest("__u", "__v").alias("__v"),
         )
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     # cut e BEFORE the symmetrizing union: both nb branches read e, so
     # the nb cut would otherwise run the caller's upstream edge pipeline
@@ -481,27 +475,27 @@ def label_propagation(
     nb = e.select(F.col("__u").alias("__n"), F.col("__v").alias("__m")).union(
         e.select(F.col("__v").alias("__n"), F.col("__u").alias("__m"))
     )
-    nb = truncate_lineage(nb, checkpoint_dir)
+    nb = truncate_lineage(nb)
     labels = nb.select(F.col("__n").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     w = Window.partitionBy("__n").orderBy(
         F.col("__cnt").desc(), F.col("label").asc()
     )
-    lc = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "labelprop")
-    for _ in range(iters):
-        counts = (
-            nb.join(labels, nb["__m"] == labels["node"])
-            .groupBy("__n", "label")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-        )
-        labels = (
-            counts.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(F.col("__n").alias("node"), "label")
-        )
-        labels = lc.cut(labels)
-    labels = lc.finish(labels)
+    with LoopCheckpointer(edges.sparkSession, "labelprop") as lc:
+        for _ in range(iters):
+            counts = (
+                nb.join(labels, nb["__m"] == labels["node"])
+                .groupBy("__n", "label")
+                .agg(F.count(F.lit(1)).alias("__cnt"))
+            )
+            labels = (
+                counts.withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") == 1)
+                .select(F.col("__n").alias("node"), "label")
+            )
+            labels = lc.cut(labels)
+        labels = lc.finish(labels)
     return labels.select("node", "label").orderBy("node")
 
 
@@ -511,7 +505,6 @@ def k_core(
     a: str = "a",
     b: str = "b",
     max_rounds: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core decomposition (membership for a fixed k): iteratively
     peel every node of degree < k until the remaining subgraph — the
@@ -548,8 +541,7 @@ def k_core(
         )
         .distinct()
     )
-    e = truncate_lineage(e, checkpoint_dir)
-    lc = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "kcore")
+    e = truncate_lineage(e)
 
     def degrees(es: DataFrame) -> DataFrame:
         nb = es.select(F.col("__u").alias("__n")).union(
@@ -557,32 +549,31 @@ def k_core(
         )
         return nb.groupBy("__n").agg(F.count(F.lit(1)).alias("__d"))
 
-    for _ in range(max_rounds):
-        # materialize the (small) dropped set once: the emptiness probe
-        # and the two anti-joins would otherwise each recompute the
-        # degree aggregation (2 jobs/round -> 1). Fresh truncation per
-        # round, never chained — dropped does not feed later lineage.
-        dropped = truncate_lineage(
-            degrees(e).where(F.col("__d") < k).select("__n"), checkpoint_dir
+    with LoopCheckpointer(edges.sparkSession, "kcore") as lc:
+        for _ in range(max_rounds):
+            # materialize the (small) dropped set once: the emptiness probe
+            # and the two anti-joins would otherwise each recompute the
+            # degree aggregation (2 jobs/round -> 1). Fresh truncation per
+            # round, never chained — dropped does not feed later lineage.
+            dropped = truncate_lineage(degrees(e).where(F.col("__d") < k).select("__n"))
+            # bounded driver state: one emptiness bit per round (an empty
+            # edge set yields an empty dropped set, so the all-peeled case
+            # exits here too, with a schema-correct empty result)
+            if dropped.isEmpty():
+                e = lc.finish(e)
+                return (
+                    degrees(e)
+                    .select(F.col("__n").alias("node"), F.col("__d").alias("degree"))
+                    .orderBy("node")
+                )
+            e = e.join(
+                dropped.withColumnRenamed("__n", "__u"), "__u", "left_anti"
+            ).join(dropped.withColumnRenamed("__n", "__v"), "__v", "left_anti")
+            e = lc.cut(e)
+        raise RuntimeError(
+            f"k_core did not stabilize in {max_rounds} rounds (peeling depth "
+            "exceeds the budget — raise max_rounds)"
         )
-        # bounded driver state: one emptiness bit per round (an empty
-        # edge set yields an empty dropped set, so the all-peeled case
-        # exits here too, with a schema-correct empty result)
-        if dropped.isEmpty():
-            e = lc.finish(e)
-            return (
-                degrees(e)
-                .select(F.col("__n").alias("node"), F.col("__d").alias("degree"))
-                .orderBy("node")
-            )
-        e = e.join(
-            dropped.withColumnRenamed("__n", "__u"), "__u", "left_anti"
-        ).join(dropped.withColumnRenamed("__n", "__v"), "__v", "left_anti")
-        e = lc.cut(e)
-    raise RuntimeError(
-        f"k_core did not stabilize in {max_rounds} rounds (peeling depth "
-        "exceeds the budget — raise max_rounds)"
-    )
 
 
 def negative_sampling(
@@ -808,7 +799,6 @@ def hits_scores(
     src: str = "src",
     dst: str = "dst",
     iters: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS hub/authority scores (Kleinberg, JACM 1999) over a directed
     edge list — the bipartite-friendly companion to `pagerank`: hubs
@@ -848,23 +838,20 @@ def hits_scores(
     # list instead of re-running the caller's upstream edge pipeline
     # (same fix as pagerank/connected_components, r10)
     e = truncate_lineage(
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        checkpoint_dir,
+        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
     )
     nodes = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
         .distinct()
     )
-    nodes = truncate_lineage(nodes, checkpoint_dir)
+    nodes = truncate_lineage(nodes)
 
     # TWO checkpointers, one per score vector: LoopCheckpointer.cut
     # releases the PREVIOUS cut's blocks, so interleaving auth and hub
     # cuts through one instance would free the final auth the readout
     # still needs (each instance only ever releases its own stale
     # rounds).
-    lc_a = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "hits_a")
-    lc_h = LoopCheckpointer(edges.sparkSession, checkpoint_dir, "hits_h")
     # hub_0 = 1 for every node; auth/hub stay LONG until the readout
     hub = nodes.select("node", F.lit(1).cast("long").alias("__h"))
     auth = None
@@ -874,19 +861,23 @@ def hits_scores(
     # (the triangle_count x100 lesson — 1.5 GB sort spill at sf3.0
     # here). The build side is the |nodes|-row score vector: narrow,
     # well-estimated, |nodes|/partitions rows per task.
-    for _ in range(iters):
-        auth = lc_a.cut(
-            e.join(hub.hint("shuffle_hash"), e["__src"] == hub["node"])
-            .groupBy(F.col("__dst").alias("node"))
-            .agg(F.sum("__h").alias("__a"))
-        )
-        hub = lc_h.cut(
-            e.join(auth.hint("shuffle_hash"), e["__dst"] == auth["node"])
-            .groupBy(F.col("__src").alias("node"))
-            .agg(F.sum("__a").alias("__h"))
-        )
-    hub = lc_h.finish(hub)
-    auth = lc_a.finish(auth)
+    with (
+        LoopCheckpointer(edges.sparkSession, "hits_a") as lc_a,
+        LoopCheckpointer(edges.sparkSession, "hits_h") as lc_h,
+    ):
+        for _ in range(iters):
+            auth = lc_a.cut(
+                e.join(hub.hint("shuffle_hash"), e["__src"] == hub["node"])
+                .groupBy(F.col("__dst").alias("node"))
+                .agg(F.sum("__h").alias("__a"))
+            )
+            hub = lc_h.cut(
+                e.join(auth.hint("shuffle_hash"), e["__dst"] == auth["node"])
+                .groupBy(F.col("__src").alias("node"))
+                .agg(F.sum("__a").alias("__h"))
+            )
+        hub = lc_h.finish(hub)
+        auth = lc_a.finish(auth)
 
     totals = hub.agg(F.sum("__h").alias("__sh")).crossJoin(
         auth.agg(F.sum("__a").alias("__sa"))

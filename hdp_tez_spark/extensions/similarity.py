@@ -912,7 +912,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     n_planes: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): vectors
     whose embedding cosine exceeds `threshold` are semantic duplicates;
@@ -939,7 +938,7 @@ def semantic_dedup(
     pairs = embedding_near_dupes(
         df, id_col=id_col, vec_col=vec_col, threshold=threshold, n_planes=n_planes
     ).select("id_a", "id_b")
-    cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    cc = connected_components(pairs)
     return (
         df.select(F.col(id_col))
         .join(cc, df[id_col] == cc.node, "left")

@@ -381,7 +381,6 @@ def bpe_merges(
     df: DataFrame,
     text_col: str,
     n_merges: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Byte-pair-encoding merge training over a text corpus — the
     tokenizer-training pass of an LLM data pipeline. Learns `n_merges`
@@ -404,8 +403,8 @@ def bpe_merges(
     only the single winning pair (2 short strings + a count) reaches
     the driver per round, the kmeans_fit driver-traffic contract. The
     vocab's lineage is cut every round (plans/checkpoints.truncate_
-    lineage: localCheckpoint, or a reliable checkpoint when
-    `checkpoint_dir`/the SparkContext provides one).
+    lineage: localCheckpoint, or a reliable checkpoint when the
+    SparkContext has a checkpoint dir).
 
     Merge application detail: the pair is replaced via the
     separator-doubling `replace()` chain in `_apply_merge` (symbols
@@ -427,42 +426,40 @@ def bpe_merges(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("word", "cnt", _word_seq(F.col("word")).alias("seq"))
     )
-    vocab = truncate_lineage(vocab, checkpoint_dir)
-    lc = LoopCheckpointer(spark, checkpoint_dir, "bpe")
-
+    vocab = truncate_lineage(vocab)
     merges: list[tuple[int, str, str, str, int]] = []
-    for r in range(1, n_merges + 1):
-        syms = F.split(F.col("seq"), " ")
-        # guard: sequence(1, 0) would generate a DESCENDING range
-        idx = F.when(
-            F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
-        ).otherwise(F.array().cast("array<int>"))
-        pairs = F.transform(
-            idx,
-            lambda i: F.concat(
-                F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
-            ),
-        )
-        best = (
-            vocab.select(F.explode(pairs).alias("pair"), "cnt")
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("pcnt"))
-            .orderBy(F.desc("pcnt"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        pair, pcnt = best[0]["pair"], int(best[0]["pcnt"])
-        left, right = pair.split(" ")
-        merged = left + right
-        merges.append((r, left, right, merged, pcnt))
-        vocab = vocab.withColumn("seq", _apply_merge(F.col("seq"), left, right))
-        # LoopCheckpointer, not truncate_lineage: a 20+-merge run chains
-        # 20+ checkpoints, which gets geometrically slower with depth
-        # (plans/checkpoints.py)
-        vocab = lc.cut(vocab)
-    lc.cleanup()
+    with LoopCheckpointer(spark, "bpe") as lc:
+        for r in range(1, n_merges + 1):
+            syms = F.split(F.col("seq"), " ")
+            # guard: sequence(1, 0) would generate a DESCENDING range
+            idx = F.when(
+                F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
+            ).otherwise(F.array().cast("array<int>"))
+            pairs = F.transform(
+                idx,
+                lambda i: F.concat(
+                    F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
+                ),
+            )
+            best = (
+                vocab.select(F.explode(pairs).alias("pair"), "cnt")
+                .groupBy("pair")
+                .agg(F.sum("cnt").alias("pcnt"))
+                .orderBy(F.desc("pcnt"), F.asc("pair"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            pair, pcnt = best[0]["pair"], int(best[0]["pcnt"])
+            left, right = pair.split(" ")
+            merged = left + right
+            merges.append((r, left, right, merged, pcnt))
+            vocab = vocab.withColumn("seq", _apply_merge(F.col("seq"), left, right))
+            # LoopCheckpointer, not truncate_lineage: a 20+-merge run chains
+            # 20+ checkpoints, which gets geometrically slower with depth
+            # (plans/checkpoints.py)
+            vocab = lc.cut(vocab)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_count long"
     )

@@ -18,21 +18,14 @@ output served by the producer vs a re-fetchable `PERSISTED` /
 `PERSISTED_RELIABLE` edge output that survives container loss
 (`tez-api/.../dag/api/EdgeProperty.java:71-77`).
 
-`truncate_lineage` picks automatically: an explicit `checkpoint_dir`
-argument (threaded through the iterative operators' kwargs) or a
-checkpoint dir already configured on the SparkContext upgrades the cut
-to a reliable checkpoint; otherwise it falls back to `localCheckpoint`.
-A cluster deployment therefore needs ONE line —
-`sc.setCheckpointDir("hdfs://...")` — to make every iterative operator
-in the engine fault-tolerant, with zero code changes.
-
-NOTE — `checkpoint_dir` is STICKY session config, exactly like calling
-`sc.setCheckpointDir` yourself (Spark has no per-call checkpoint
-location): after one operator passes it, later no-kwarg
-`truncate_lineage` calls in the same session also take the reliable
-branch. That is the intended cluster posture (everything fault-tolerant
-once a dir exists); a sandbox that wants the fast path back can reset
-with `sc._jsc.sc().setCheckpointDir(None)`.
+`truncate_lineage` picks from ONE switch, the SparkContext's checkpoint
+dir: when it is set, every cut is a reliable checkpoint; otherwise it
+falls back to `localCheckpoint`. A cluster deployment therefore sets it
+once — `--conf spark.checkpoint.dir=hdfs://...` at submit time (Spark
+reads it at startup), or `sc.setCheckpointDir("hdfs://...")` — and every
+iterative operator in the engine becomes fault-tolerant, with zero code
+changes. There is no per-operator location: reliability is a deployment
+setting, like the reference's edge persistence.
 """
 
 from __future__ import annotations
@@ -40,27 +33,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-# Dirs this module already applied, keyed by SparkContext application id:
-# requested dir -> the QUALIFIED value the context reported back after
-# setCheckpointDir (Spark qualifies the URI and appends a random UUID
-# subdir, so the reported value never string-matches the caller's
-# argument — naive equality would re-invoke setCheckpointDir, minting a
-# fresh UUID dir + an FS mkdirs round-trip, a namenode RPC on HDFS, every
-# round of a 25-round iteration). Keeping BOTH sides lets a later call
-# detect that something else changed the context dir in between (live
-# value no longer matches what we applied) and re-assert the explicit
-# argument instead of silently checkpointing into the foreign location.
-_applied_dirs: dict[str, tuple[str, str]] = {}
+# Every RESET_EVERY-th LoopCheckpointer cut is a parquet round-trip
+# instead of a checkpoint (see LoopCheckpointer).
+RESET_EVERY = 8
 
 
-def truncate_lineage(
-    df: DataFrame,
-    checkpoint_dir: str | None = None,
-    eager: bool = True,
-) -> DataFrame:
-    """Cut `df`'s lineage: reliable `checkpoint` when a directory is
-    available (explicit arg, or already configured on the SparkContext),
-    `localCheckpoint` otherwise.
+def _context_dir(spark) -> str | None:
+    """The SparkContext's checkpoint dir (the one reliability switch),
+    or None when the session runs on local checkpoints."""
+    live = spark.sparkContext._jsc.sc().getCheckpointDir()
+    return live.get() if live.isDefined() else None
+
+
+def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut `df`'s lineage: reliable `checkpoint` when the SparkContext
+    has a checkpoint dir, `localCheckpoint` otherwise.
 
     `eager=True` materializes immediately — iterative loops rely on this
     so each round runs exactly one pass (convergence metrics observe the
@@ -83,32 +70,12 @@ def truncate_lineage(
 
     if eager:
         with coalesce_floor(df.sparkSession):
-            return _truncate_lineage_inner(df, checkpoint_dir, eager)
-    return _truncate_lineage_inner(df, checkpoint_dir, eager)
+            return _truncate_lineage_inner(df, eager)
+    return _truncate_lineage_inner(df, eager)
 
 
-def _truncate_lineage_inner(
-    df: DataFrame,
-    checkpoint_dir: str | None = None,
-    eager: bool = True,
-) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    app = sc.applicationId
-    jsc = sc._jsc.sc()
-    live = jsc.getCheckpointDir()
-    live_val = live.get() if live.isDefined() else None
-    if checkpoint_dir is not None:
-        requested, applied = _applied_dirs.get(app, (None, None))
-        if (
-            requested != checkpoint_dir
-            or applied is None
-            or live_val != applied
-        ):
-            sc.setCheckpointDir(checkpoint_dir)
-            new_live = jsc.getCheckpointDir()
-            _applied_dirs[app] = (checkpoint_dir, new_live.get())
-            live_val = new_live.get()
-    if live_val is None:
+def _truncate_lineage_inner(df: DataFrame, eager: bool) -> DataFrame:
+    if _context_dir(df.sparkSession) is None:
         return df.localCheckpoint(eager=eager)
     if not eager:
         # lazy reliable checkpoint: no persist — see docstring
@@ -141,48 +108,44 @@ class LoopCheckpointer:
     a near-critical similarity graph (the sf1.0 semantic-dedup graph
     needs ~22 propagate+jump rounds), or a 20-merge BPE run.
 
-    Fix (measured flat through 40 rounds): every ``reset_every``-th cut
+    Fix (measured flat through 40 rounds): every ``RESET_EVERY``-th cut
     is a parquet ROUND-TRIP through a double buffer — a file scan has no
     RDD ancestry, so the chain the checkpoint machinery walks never
-    exceeds ``reset_every``; the other rounds keep the cheap
+    exceeds ``RESET_EVERY``; the other rounds keep the cheap
     `truncate_lineage` path (localCheckpoint, or reliable checkpoint
-    when a dir is configured).
+    when the context has a checkpoint dir).
 
-    Spill location: explicit ``checkpoint_dir``, else the SparkContext's
-    configured checkpoint dir, else a driver-local temp dir — the same
-    posture as `truncate_lineage` (driver-local paths are only correct
-    in local mode; a real cluster configures a DFS checkpoint dir with
-    one line and every loop spill follows it automatically).
+    Spill location: the SparkContext's checkpoint dir, else a
+    driver-local temp dir — the same switch as `truncate_lineage`
+    (driver-local paths are only correct in local mode; a real cluster
+    configures a DFS checkpoint dir once and every loop spill follows
+    it automatically).
 
-    Usage::
+    Usage — the ``with`` block deletes the spill dir on every exit,
+    including a loop that raises::
 
-        lc = LoopCheckpointer(df.sparkSession, checkpoint_dir, "cc")
-        try:
+        with LoopCheckpointer(df.sparkSession, "cc") as lc:
             for ...:
                 state = lc.cut(new_state)   # once per round
             return lc.finish(state)         # cuts file deps, rm spill
-        finally:
-            lc.cleanup()                    # idempotent; no-op after finish
     """
 
-    def __init__(
-        self,
-        spark,
-        checkpoint_dir: str | None = None,
-        label: str = "loop",
-        reset_every: int = 8,
-    ) -> None:
+    def __init__(self, spark, label: str) -> None:
         import uuid
 
         self._spark = spark
-        self._checkpoint_dir = checkpoint_dir
-        self._reset_every = max(1, reset_every)
         self._rounds = 0
         self._writes = 0
         self._base: str | None = None  # resolved lazily, only if needed
         self._label = label
         self._token = uuid.uuid4().hex[:8]
         self._prev: DataFrame | None = None  # last cut, for block release
+
+    def __enter__(self) -> LoopCheckpointer:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.cleanup()
 
     def _release_prev(self, new_df: DataFrame | None) -> None:
         """Free the PREVIOUS round's checkpoint blocks. Safe the moment
@@ -215,11 +178,7 @@ class LoopCheckpointer:
 
     def _resolve_base(self) -> str:
         if self._base is None:
-            base = self._checkpoint_dir
-            if base is None:
-                jsc = self._spark.sparkContext._jsc.sc()
-                live = jsc.getCheckpointDir()
-                base = live.get() if live.isDefined() else None
+            base = _context_dir(self._spark)
             if base is None:
                 import tempfile
 
@@ -237,8 +196,8 @@ class LoopCheckpointer:
         """Truncate one round's lineage; call exactly once per round.
         Eager either way — attached `observe` metrics ride the job."""
         self._rounds += 1
-        if self._rounds % self._reset_every != 0:
-            out = truncate_lineage(df, self._checkpoint_dir)
+        if self._rounds % RESET_EVERY != 0:
+            out = truncate_lineage(df)
             self._release_prev(out)
             return out
         path = self._buffer(self._writes)
@@ -255,11 +214,11 @@ class LoopCheckpointer:
 
     def finish(self, df: DataFrame) -> DataFrame:
         """Detach `df` from the spill files (one checkpoint on a flat,
-        at-most-``reset_every``-deep plan — cheap) and delete them.
+        at-most-``RESET_EVERY``-deep plan — cheap) and delete them.
         The FINAL cut's blocks are intentionally NOT released — the
         caller's returned DataFrame reads from them."""
         if self._writes:
-            df = truncate_lineage(df, self._checkpoint_dir)
+            df = truncate_lineage(df)
         # df either IS the tracked final cut or was just re-cut from the
         # parquet buffer; either way drop tracking without unpersisting
         # the data the caller is about to read.
@@ -269,7 +228,7 @@ class LoopCheckpointer:
 
     def cleanup(self) -> None:
         """Delete the spill dir (Hadoop FS — works for file:/hdfs:/s3a:).
-        Idempotent; safe to call from `finally` after `finish`."""
+        Idempotent: the ``with`` exit calls it again after `finish`."""
         if self._base is None or not self._writes:
             self._base = None
             return

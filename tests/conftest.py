@@ -6,6 +6,7 @@ from pathlib import Path
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, Phase
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -15,6 +16,19 @@ from hdp_tez_spark.sources.catalog import TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CHECK = "/root/testdata/sf0.01"
+
+# Hypothesis settings shared by the Spark-backed property tests
+# (`@settings(**SETTINGS)`; files wanting fewer examples override only
+# max_examples). No shrink phase: every example runs Spark jobs, so a
+# failing property shrank for minutes before reporting (121.6 s against
+# 7.6 s passing) — the failing example is reported as drawn instead.
+# Phase.explicit stays, so `@example` pins still run.
+SETTINGS = dict(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+    phases=[Phase.explicit, Phase.reuse, Phase.generate, Phase.target],
+)
 
 
 def py_tokens(text: str) -> list[str]:

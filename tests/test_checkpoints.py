@@ -2,17 +2,16 @@
 
 `plans/checkpoints.truncate_lineage` falls back to `localCheckpoint`
 (sandbox default, covered by every other test in the suite); these tests
-pin the RELIABLE branch: an explicit `checkpoint_dir` kwarg (or a
-SparkContext-configured dir) must (a) produce bit-identical results and
-(b) actually write checkpoint data under the directory — the property a
-1000-executor job depends on to survive executor loss mid-iteration
-(Tez analogue: re-fetchable PERSISTED edge output,
-`tez-api/.../dag/api/EdgeProperty.java:71-77`).
+pin the RELIABLE branch: a SparkContext checkpoint dir — the one switch,
+`spark.checkpoint.dir` / `sc.setCheckpointDir` — must (a) produce
+bit-identical results and (b) actually write checkpoint data under the
+directory — the property a 1000-executor job depends on to survive
+executor loss mid-iteration (Tez analogue: re-fetchable PERSISTED edge
+output, `tez-api/.../dag/api/EdgeProperty.java:71-77`).
 
-The checkpoint dir is STICKY session state (see the module docstring),
-so every LOCAL baseline in this file is computed BEFORE the first
-reliable call, and the fixture resets both the context dir and the
-module's applied-dir record afterwards.
+The checkpoint dir is session state, so the `ckpt_dir` fixture sets it
+and resets it afterwards; tests that need a LOCAL baseline compute it
+before requesting the fixture.
 """
 
 from __future__ import annotations
@@ -20,22 +19,23 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from hdp_tez_spark.plans import checkpoints as CK
-from hdp_tez_spark.plans.checkpoints import truncate_lineage
+from hdp_tez_spark.plans.checkpoints import LoopCheckpointer, truncate_lineage
 
 
 @pytest.fixture()
 def ckpt_dir(spark):
     d = tempfile.mkdtemp(prefix="hdp_tez_ckpt_")
+    spark.sparkContext.setCheckpointDir(d)
     yield d
     # restore the default (no checkpoint dir) so other tests keep the
     # localCheckpoint fast path, then clean up
     spark.sparkContext._jsc.sc().setCheckpointDir(None)
-    CK._applied_dirs.clear()
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -45,39 +45,34 @@ def _files_under(d: str) -> list[str]:
 
 def test_truncate_lineage_reliable_branch_writes_files(spark, ckpt_dir):
     df = spark.range(100).withColumn("x", F.col("id") * 2)
-    out = truncate_lineage(df, checkpoint_dir=ckpt_dir)
+    out = truncate_lineage(df)
     assert out.count() == 100
     assert _files_under(ckpt_dir), "reliable checkpoint wrote nothing"
 
 
-def test_truncate_lineage_sets_dir_once_not_per_round(spark, ckpt_dir):
-    """The context qualifies the dir and appends a UUID subdir, so naive
-    equality re-set it every call; the applied-dir record must keep all
-    rounds in ONE configured location (one top-level UUID dir)."""
-    for _ in range(4):
-        truncate_lineage(spark.range(10), checkpoint_dir=ckpt_dir).count()
-    top = [e for e in os.listdir(ckpt_dir)]
-    assert len(top) == 1, f"setCheckpointDir re-invoked per call: {top}"
-
-
 def test_truncate_lineage_uses_context_configured_dir(spark, ckpt_dir):
-    spark.sparkContext.setCheckpointDir(ckpt_dir)
-    out = truncate_lineage(spark.range(10))
-    assert out.count() == 10
-    assert _files_under(ckpt_dir), "context-configured dir was not used"
+    """The mode follows the LIVE context dir: set -> files under it;
+    cleared -> back to localCheckpoint, nothing new written."""
+    assert truncate_lineage(spark.range(10)).count() == 10
+    n_reliable = len(_files_under(ckpt_dir))
+    assert n_reliable, "context-configured dir was not used"
+    spark.sparkContext._jsc.sc().setCheckpointDir(None)
+    assert truncate_lineage(spark.range(10)).count() == 10
+    assert len(_files_under(ckpt_dir)) == n_reliable, (
+        "cut stayed reliable after the context dir was cleared"
+    )
 
 
-def test_iterative_ops_reliable_match_local(spark, ckpt_dir):
-    """connected_components / pagerank / bfs / prefix_filter_join under a
-    reliable checkpoint dir produce bit-identical results to the
-    localCheckpoint path. ALL local baselines run first: the dir is
-    sticky, so any reliable call before a baseline would silently
-    upgrade the baseline too."""
+def test_iterative_ops_reliable_match_local(spark, request):
+    """connected_components / pagerank / bfs / prefix_filter_join /
+    k_core under a reliable checkpoint dir produce bit-identical results
+    to the localCheckpoint path. ALL local baselines run before the
+    fixture switches the context to reliable cuts."""
     from hdp_tez_spark.extensions.dedup import (
         connected_components,
         prefix_filter_join,
     )
-    from hdp_tez_spark.extensions.graph import bfs_distances, pagerank
+    from hdp_tez_spark.extensions.graph import bfs_distances, k_core, pagerank
 
     cc_edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
@@ -94,59 +89,34 @@ def test_iterative_ops_reliable_match_local(spark, ckpt_dir):
         ],
         "doc_id long, text string",
     )
+    # triangle 1-2-3 plus a tail 3-4-5: the 2-core peels 5, then 4
+    kc_edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "a long, b long"
+    )
 
-    # --- local baselines (no checkpoint dir configured yet) ---
+    def run():
+        return (
+            {(r.node, r.label) for r in connected_components(cc_edges).collect()},
+            {(r.node, r.rank) for r in pagerank(pr_edges, iters=3).collect()},
+            {(r.node, r.dist) for r in bfs_distances(pr_edges, srcs).collect()},
+            {
+                (r.id_a, r.id_b, r.jaccard)
+                for r in prefix_filter_join(docs, "doc_id", "text", 0.5).collect()
+            },
+            {(r.node, r.degree) for r in k_core(kc_edges, k=2).collect()},
+        )
+
     assert not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    cc_local = {(r.node, r.label) for r in connected_components(cc_edges).collect()}
-    pr_local = {(r.node, r.rank) for r in pagerank(pr_edges, iters=3).collect()}
-    bfs_local = {(r.node, r.dist) for r in bfs_distances(pr_edges, srcs).collect()}
-    ppj_local = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in prefix_filter_join(docs, "doc_id", "text", 0.5).collect()
-    }
-
-    # --- reliable runs ---
-    cc_rel = {
-        (r.node, r.label)
-        for r in connected_components(cc_edges, checkpoint_dir=ckpt_dir).collect()
-    }
-    pr_rel = {
-        (r.node, r.rank)
-        for r in pagerank(pr_edges, iters=3, checkpoint_dir=ckpt_dir).collect()
-    }
-    bfs_rel = {
-        (r.node, r.dist)
-        for r in bfs_distances(pr_edges, srcs, checkpoint_dir=ckpt_dir).collect()
-    }
-    ppj_rel = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in prefix_filter_join(
-            docs, "doc_id", "text", 0.5, checkpoint_dir=ckpt_dir
-        ).collect()
-    }
+    cc_local, pr_local, bfs_local, ppj_local, kc_local = run()
+    ckpt_dir = request.getfixturevalue("ckpt_dir")
+    cc_rel, pr_rel, bfs_rel, ppj_rel, kc_rel = run()
 
     assert cc_rel == cc_local == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     assert pr_rel == pr_local
     assert bfs_rel == bfs_local == {(1, 0), (2, 1), (3, 2), (4, 3)}
     assert ppj_rel == ppj_local and {p[:2] for p in ppj_local} == {(1, 2)}
+    assert kc_rel == kc_local == {(1, 2), (2, 2), (3, 2)}
     assert _files_under(ckpt_dir)
-
-
-def test_explicit_dir_reasserts_after_external_change(spark, ckpt_dir):
-    """If other code moved the context's checkpoint dir, a later call
-    with an explicit checkpoint_dir must re-assert ITS directory rather
-    than silently checkpointing into the foreign location."""
-    truncate_lineage(spark.range(5), checkpoint_dir=ckpt_dir).count()
-    foreign = tempfile.mkdtemp(prefix="hdp_tez_foreign_")
-    try:
-        spark.sparkContext.setCheckpointDir(foreign)
-        before = len(_files_under(ckpt_dir))
-        truncate_lineage(spark.range(5), checkpoint_dir=ckpt_dir).count()
-        assert len(_files_under(ckpt_dir)) > before, (
-            "explicit dir was ignored after an external setCheckpointDir"
-        )
-    finally:
-        shutil.rmtree(foreign, ignore_errors=True)
 
 
 def test_lazy_reliable_checkpoint_does_not_pin_cache(spark, ckpt_dir):
@@ -154,50 +124,55 @@ def test_lazy_reliable_checkpoint_does_not_pin_cache(spark, ckpt_dir):
     review leak): the lazy path skips the persist entirely, so the
     session's pinned-RDD census cannot GROW across the call."""
     before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    out = truncate_lineage(spark.range(50), checkpoint_dir=ckpt_dir, eager=False)
+    out = truncate_lineage(spark.range(50), eager=False)
     assert out.count() == 50
     after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert after <= before, f"lazy path pinned {after - before} datasets"
 
 
-def test_loop_checkpointer_parquet_reset_and_cleanup(spark, ckpt_dir):
-    """A loop deeper than reset_every must produce correct results, spill
-    through parquet on every reset_every-th cut, and leave no files after
+def test_loop_checkpointer_parquet_reset_and_cleanup(spark, ckpt_dir, monkeypatch):
+    """A loop deeper than RESET_EVERY must produce correct results, spill
+    through parquet on every RESET_EVERY-th cut, and leave no files after
     finish(). (The geometric chained-checkpoint slowdown itself is a
-    timing property measured in SCALE.md; here we pin the mechanics.)
-    Uses the self-resetting ckpt_dir fixture: an explicit checkpoint_dir
-    is sticky session state (module docstring)."""
-    from pathlib import Path
-
-    from hdp_tez_spark.plans.checkpoints import LoopCheckpointer
-
-    lc = LoopCheckpointer(spark, ckpt_dir, "t", reset_every=3)
-    df = spark.range(10).withColumnRenamed("id", "v")
-    for i in range(7):  # rounds 3 and 6 spill to parquet
-        df = lc.cut(df.withColumn("v", F.col("v") + 1))
-    assert lc._writes == 2
+    timing property measured in SCALE.md; here we pin the mechanics.)"""
+    monkeypatch.setattr(CK, "RESET_EVERY", 3)
     spill_root = Path(ckpt_dir)
-    spilled = [p for p in spill_root.rglob("*.parquet") if "spill-t-" in str(p)]
-    assert spilled, "reset rounds must write parquet buffers"
-    out = lc.finish(df)
-    assert sorted(r.v for r in out.collect()) == list(range(7, 17))
-    assert not [
-        p for p in spill_root.rglob("*.parquet") if "spill-t-" in str(p)
-    ], "finish must rm spills"
-    lc.cleanup()  # idempotent after finish
+    with LoopCheckpointer(spark, "t") as lc:
+        df = spark.range(10).withColumnRenamed("id", "v")
+        for i in range(7):  # rounds 3 and 6 spill to parquet
+            df = lc.cut(df.withColumn("v", F.col("v") + 1))
+        assert lc._writes == 2
+        spilled = [p for p in spill_root.rglob("*.parquet") if "spill-t-" in str(p)]
+        assert spilled, "reset rounds must write parquet buffers"
+        out = lc.finish(df)
+        assert sorted(r.v for r in out.collect()) == list(range(7, 17))
+        assert not [
+            p for p in spill_root.rglob("*.parquet") if "spill-t-" in str(p)
+        ], "finish must rm spills"
 
 
 def test_loop_checkpointer_shallow_loop_no_files(spark):
-    """Loops shorter than reset_every never touch the filesystem and
-    finish() returns the frame unchanged (localCheckpoint default path —
-    no checkpoint_dir, so nothing sticky)."""
-    from hdp_tez_spark.plans.checkpoints import LoopCheckpointer
-
-    lc = LoopCheckpointer(spark, None, "t", reset_every=8)
-    df = spark.range(5)
-    for _ in range(3):
-        df = lc.cut(df)
-    assert lc._writes == 0
-    assert lc._base is None
-    out = lc.finish(df)
+    """Loops shorter than RESET_EVERY never touch the filesystem and
+    finish() returns the frame unchanged (localCheckpoint default path)."""
+    with LoopCheckpointer(spark, "t") as lc:
+        df = spark.range(5)
+        for _ in range(3):
+            df = lc.cut(df)
+        assert lc._writes == 0
+        assert lc._base is None
+        out = lc.finish(df)
     assert out is df
+
+
+def test_loop_spill_released_when_operator_raises(spark, ckpt_dir, monkeypatch):
+    """An iterative operator that raises mid-loop still deletes its spill
+    dir: k_core on an 8-node path peels two endpoints per round, so
+    max_rounds=3 raises after a parquet reset round has written."""
+    from hdp_tez_spark.extensions.graph import k_core
+
+    monkeypatch.setattr(CK, "RESET_EVERY", 2)
+    path = spark.createDataFrame([(i, i + 1) for i in range(7)], "a long, b long")
+    with pytest.raises(RuntimeError, match="did not stabilize"):
+        k_core(path, k=2, max_rounds=3)
+    leaked = [p for p in Path(ckpt_dir).rglob("spill-kcore-*")]
+    assert not leaked, f"k_core left its loop spill behind: {leaked}"

@@ -22,16 +22,12 @@ import hashlib
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from tests.conftest import py_shingles, py_tokens
+from tests.conftest import SETTINGS as BASE_SETTINGS, py_shingles, py_tokens
 
-SETTINGS = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+SETTINGS = {**BASE_SETTINGS, "max_examples": 5}
 
 _VOCAB = "the cat sat mat dog ran".split()
 

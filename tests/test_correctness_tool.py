@@ -122,3 +122,16 @@ def test_duck_con_reads_spark_written_table_dirs(tool, tmp_path):
             pd.DataFrame({"x": [1]}).to_parquet(tmp_path / f"{t}.parquet")
     con = tool.duck_con(str(tmp_path))
     assert con.sql("SELECT count(*) FROM region").fetchone()[0] == 2
+
+
+def test_git_head_outside_a_checkout_is_unknown(tool, monkeypatch):
+    """Outside a git checkout `git rev-parse` exits non-zero WITHOUT
+    raising and prints nothing; the stamp must still say "unknown", not
+    an empty string."""
+    import subprocess
+
+    def no_repo(cmd, **kw):
+        return subprocess.CompletedProcess(cmd, 128, stdout="", stderr="fatal")
+
+    monkeypatch.setattr(subprocess, "run", no_repo)
+    assert tool._git_head() == "unknown"

@@ -29,17 +29,14 @@ import math
 import random
 import time
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hdp_tez_spark.extensions.dedup import connected_components
 from hdp_tez_spark.plans.checkpoints import LoopCheckpointer
+from tests.conftest import SETTINGS as BASE_SETTINGS
 
-SETTINGS = dict(
-    max_examples=4,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+SETTINGS = {**BASE_SETTINGS, "max_examples": 4}
 
 
 def _round_budget(n: int) -> int:
@@ -130,9 +127,8 @@ def test_loop_checkpointer_cuts_stay_wall_flat(spark):
     ~17 already exceeds the 10x-median + 2s absolute guard — the test
     fails in seconds instead of timing out the suite."""
     df = spark.range(0, 5000).selectExpr("id", "id % 97 AS k")
-    lc = LoopCheckpointer(spark, None, "flat-test")
     times: list[float] = []
-    try:
+    with LoopCheckpointer(spark, "flat-test") as lc:
         state = df
         for i in range(26):
             state = state.selectExpr("id", "(k * 31 + 7) % 97 AS k")
@@ -147,5 +143,3 @@ def test_loop_checkpointer_cuts_stay_wall_flat(spark):
                     f"{baseline:.2f}s — geometric checkpoint-chain "
                     f"slowdown reintroduced? times={['%.2f' % t for t in times]}"
                 )
-    finally:
-        lc.cleanup()

@@ -8,18 +8,13 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from hdp_tez_spark.extensions.dedup import connected_components
 from hdp_tez_spark.operators.joins import asof_join, salted_join
-from tests.conftest import py_shingles, py_tokens
+from tests.conftest import SETTINGS, py_shingles, py_tokens
 
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 events = st.lists(
     st.tuples(

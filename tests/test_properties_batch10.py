@@ -12,7 +12,7 @@ import math
 from collections import Counter, defaultdict
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from hdp_tez_spark.extensions.analytics import (
@@ -24,12 +24,7 @@ from hdp_tez_spark.extensions.experiments import (
     propensity_match,
     target_encoding,
 )
-
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.conftest import SETTINGS
 
 
 # ------------------------------------------------------------ bcubed_eval

@@ -12,19 +12,14 @@ import datetime as dt
 import math
 from collections import Counter
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import rfm_scores
 from hdp_tez_spark.extensions.dedup import sorted_neighborhood_pairs
 from hdp_tez_spark.extensions.experiments import average_precision
 from hdp_tez_spark.extensions.similarity import knn_label
 from hdp_tez_spark.extensions.splits import time_embargo_split
-
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.conftest import SETTINGS
 
 
 # ------------------------------------------------------------ rfm_scores

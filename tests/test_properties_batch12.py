@@ -13,18 +13,13 @@ import math
 import re
 from collections import Counter
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import behavior_entropy
 from hdp_tez_spark.extensions.experiments import label_noise, power_analysis
 from hdp_tez_spark.extensions.textstats import readability_scores, vocab_growth
-from tests.conftest import py_tokens
+from tests.conftest import SETTINGS, py_tokens
 
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 WORDS = ["cat", "beautiful", "xyz", "grr", "onomatopoeia", "a", "I99"]
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import event_affinity
 from hdp_tez_spark.extensions.experiments import (
@@ -21,12 +21,7 @@ from hdp_tez_spark.extensions.experiments import (
 )
 from hdp_tez_spark.extensions.ranking import rank_overlap
 from hdp_tez_spark.extensions.similarity import embedding_separability
-
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.conftest import SETTINGS
 
 
 @given(

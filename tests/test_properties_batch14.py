@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-from hypothesis import HealthCheck, example, given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from hdp_tez_spark.extensions.experiments import (
     anova_oneway,
@@ -21,12 +21,8 @@ from hdp_tez_spark.extensions.experiments import (
 )
 from hdp_tez_spark.extensions.graph import hits_scores
 from hdp_tez_spark.extensions.textstats import good_turing
+from tests.conftest import SETTINGS
 
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 VALS = st.integers(-20, 20).map(lambda i: i / 2.0)
 

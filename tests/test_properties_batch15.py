@@ -13,7 +13,7 @@ import math
 import statistics
 from collections import Counter, defaultdict
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import runs_test
 from hdp_tez_spark.extensions.experiments import (
@@ -23,12 +23,8 @@ from hdp_tez_spark.extensions.experiments import (
     isotonic_calibration,
     levene_test,
 )
+from tests.conftest import SETTINGS
 
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 VALS = st.integers(-20, 20).map(lambda i: i / 2.0)
 

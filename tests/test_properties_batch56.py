@@ -10,17 +10,13 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import kaplan_meier
 from hdp_tez_spark.extensions.experiments import fdr_bh
 from hdp_tez_spark.extensions.graph import link_prediction
+from tests.conftest import SETTINGS
 
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 subjects = st.lists(
     st.tuples(st.integers(1, 8), st.integers(0, 1)),  # (duration, event)

@@ -13,20 +13,14 @@ import statistics
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import nelson_aalen, theil_sen_trend
 from hdp_tez_spark.extensions.dedup import containment_pairs
 from hdp_tez_spark.extensions.ranking import ranking_eval
 from hdp_tez_spark.extensions.similarity import embedding_outliers
 from hdp_tez_spark.extensions.textstats import charclass_mix
-from tests.conftest import py_shingles
-
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.conftest import SETTINGS, py_shingles
 
 
 # ------------------------------------------------------------ nelson_aalen

@@ -13,7 +13,7 @@ import math
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import (
     best_split,
@@ -22,12 +22,7 @@ from hdp_tez_spark.extensions.analytics import (
 )
 from hdp_tez_spark.extensions.experiments import sprt_check
 from hdp_tez_spark.extensions.graph import k_core
-
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.conftest import SETTINGS
 
 
 # ------------------------------------------------------------ k_core

@@ -10,7 +10,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from hdp_tez_spark.extensions.analytics import (
     lift_curve,
@@ -18,12 +18,8 @@ from hdp_tez_spark.extensions.analytics import (
     trimmed_mean,
 )
 from hdp_tez_spark.extensions.experiments import conformal_intervals
+from tests.conftest import SETTINGS
 
-SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 floats = st.floats(-50.0, 50.0, allow_nan=False, width=32)
 

@@ -16,18 +16,14 @@ from __future__ import annotations
 import itertools
 import math
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
 from hdp_tez_spark.extensions.dedup import duplicated_spans
 from hdp_tez_spark.extensions.similarity import semantic_dedup
-from tests.conftest import py_tokens, py_word_ngrams
+from tests.conftest import SETTINGS as BASE_SETTINGS, py_tokens, py_word_ngrams
 
-SETTINGS = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+SETTINGS = {**BASE_SETTINGS, "max_examples": 5}
 
 _VOCAB = "the cat sat mat dog ran big red".split()
 

@@ -215,6 +215,8 @@ def _git_head() -> str:
             ["git", "rev-parse", "HEAD"], cwd=root,
             capture_output=True, text=True, timeout=10,
         ).stdout.strip()
+        if not sha:  # not a git checkout: git exits non-zero, no raise
+            return "unknown"
         dirty = subprocess.run(
             ["git", "status", "--porcelain"], cwd=root,
             capture_output=True, text=True, timeout=10,
@@ -320,6 +322,9 @@ def main() -> int:
             "exact": exact,
             "vanilla": vanilla,
             "tz": tz,
+            # the reliable-checkpoint switch (plans/checkpoints.py), e.g.
+            # from `--conf spark.checkpoint.dir=...`; None = local cuts
+            "checkpoint_dir": spark.sparkContext.getCheckpointDir(),
             "results": results,
         }
         with open(json_path, "w") as fh:
