@@ -763,9 +763,8 @@ def connected_components(
 
     Scale shape: every round shuffles only edge-table-sized data (each
     star op emits at most one edge per input edge plus one per node),
-    and the per-round lineage cut goes through LoopCheckpointer — NOT
-    chained truncate_lineage, whose cost grows geometrically with chain
-    depth (plans/checkpoints.py). `localCheckpoint` by default; a
+    and the per-round lineage cut goes through LoopCheckpointer
+    (plans/checkpoints.py). `localCheckpoint` by default; a
     SparkContext checkpoint dir gives reliable checkpoints that survive
     executor loss.
 
@@ -804,78 +803,74 @@ def connected_components(
             F.least("u", "v").alias("parent"),
         ).distinct()
     )
-    with LoopCheckpointer(e.sparkSession, "cc") as lc:
-        pending = -1
-        for i in range(max_iter):
-            # large-star: for each node a, m = min(neighborhood(a) + {a});
-            # hook every neighbor b > a to m. Output edges keep the strict
-            # child > parent orientation (b > a >= m).
-            sym = e.unionAll(
-                e.select(F.col("parent").alias("child"), F.col("child").alias("parent"))
-            ).toDF("a", "b")
-            lmin = sym.groupBy("a").agg(
-                F.least(F.min("b"), F.col("a")).alias("m")
-            )
-            large = (
-                sym.where(F.col("b") > F.col("a"))
-                .join(lmin, "a")
-                .select(F.col("b").alias("child"), F.col("m").alias("parent"))
-                .distinct()
-            )
-            # small-star: key each edge by its larger endpoint (already the
-            # orientation `large` emits); hook the smaller neighbors and the
-            # key itself to the minimum. child > parent is preserved
-            # (parent != m and m = min(parents) => parent > m; child > m).
-            smin = large.groupBy("child").agg(F.min("parent").alias("m"))
-            small = (
-                large.join(smin, "child")
-                .where(F.col("parent") != F.col("m"))
-                .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
-                .unionAll(smin.select("child", F.col("m").alias("parent")))
-                .distinct()
-            )
-            # per-round cut through LoopCheckpointer, NOT truncate_lineage:
-            # chained Dataset checkpoints get geometrically slower with
-            # chain depth (plans/checkpoints.py)
-            e = lc.cut(small)
-            # exact fixpoint test: a star forest has (a) no node that is
-            # both a parent and a child and (b) exactly one parent per
-            # child; both star ops preserve connectivity and keep
-            # child > parent, so star forest == converged components with
-            # each star's root the component minimum. (b) is not implied by
-            # (a): a depth-1 edge set can still hold {(c,p1),(c,p2)} whose
-            # roots were never merged — see docstring. One job: left-join
-            # parents against the distinct child set, then a single-row
-            # aggregate counting both violation classes.
-            kids = e.select(F.col("child").alias("__k")).distinct()
-            stats = (
-                e.join(kids, e.parent == F.col("__k"), "left")
-                .agg(
-                    F.count(F.lit(1)).alias("__total"),
-                    F.count_distinct(F.col("child")).alias("__nchild"),
-                    F.count(F.col("__k")).alias("__badp"),
-                )
-                .first()
-            )
-            pending = stats["__badp"] + (stats["__total"] - stats["__nchild"])
-            if on_round is not None:
-                on_round(i, pending)
-            if pending == 0:
-                break
-        else:
-            # star trees were still collapsing when the round budget ran
-            # out. Returning the partial forest would hand callers wrong
-            # clusters — fail loudly instead. (With the star algorithm this
-            # means max_iter << log2(n), not a deep-diameter graph.)
-            raise RuntimeError(
-                f"connected_components did not converge within max_iter={max_iter} "
-                f"rounds ({pending} non-star edges remain); rounds needed are "
-                f"O(log n) — raise max_iter"
-            )
-        labels = nodes.join(e, nodes.node == e.child, "left").select(
-            "node", F.coalesce("parent", F.col("node")).alias("label")
+    lc = LoopCheckpointer()
+    pending = -1
+    for i in range(max_iter):
+        # large-star: for each node a, m = min(neighborhood(a) + {a});
+        # hook every neighbor b > a to m. Output edges keep the strict
+        # child > parent orientation (b > a >= m).
+        sym = e.unionAll(
+            e.select(F.col("parent").alias("child"), F.col("child").alias("parent"))
+        ).toDF("a", "b")
+        lmin = sym.groupBy("a").agg(
+            F.least(F.min("b"), F.col("a")).alias("m")
         )
-        return lc.finish(labels)
+        large = (
+            sym.where(F.col("b") > F.col("a"))
+            .join(lmin, "a")
+            .select(F.col("b").alias("child"), F.col("m").alias("parent"))
+            .distinct()
+        )
+        # small-star: key each edge by its larger endpoint (already the
+        # orientation `large` emits); hook the smaller neighbors and the
+        # key itself to the minimum. child > parent is preserved
+        # (parent != m and m = min(parents) => parent > m; child > m).
+        smin = large.groupBy("child").agg(F.min("parent").alias("m"))
+        small = (
+            large.join(smin, "child")
+            .where(F.col("parent") != F.col("m"))
+            .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
+            .unionAll(smin.select("child", F.col("m").alias("parent")))
+            .distinct()
+        )
+        e = lc.cut(small)
+        # exact fixpoint test: a star forest has (a) no node that is
+        # both a parent and a child and (b) exactly one parent per
+        # child; both star ops preserve connectivity and keep
+        # child > parent, so star forest == converged components with
+        # each star's root the component minimum. (b) is not implied by
+        # (a): a depth-1 edge set can still hold {(c,p1),(c,p2)} whose
+        # roots were never merged — see docstring. One job: left-join
+        # parents against the distinct child set, then a single-row
+        # aggregate counting both violation classes.
+        kids = e.select(F.col("child").alias("__k")).distinct()
+        stats = (
+            e.join(kids, e.parent == F.col("__k"), "left")
+            .agg(
+                F.count(F.lit(1)).alias("__total"),
+                F.count_distinct(F.col("child")).alias("__nchild"),
+                F.count(F.col("__k")).alias("__badp"),
+            )
+            .first()
+        )
+        pending = stats["__badp"] + (stats["__total"] - stats["__nchild"])
+        if on_round is not None:
+            on_round(i, pending)
+        if pending == 0:
+            break
+    else:
+        # star trees were still collapsing when the round budget ran
+        # out. Returning the partial forest would hand callers wrong
+        # clusters — fail loudly instead. (With the star algorithm this
+        # means max_iter << log2(n), not a deep-diameter graph.)
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} "
+            f"rounds ({pending} non-star edges remain); rounds needed are "
+            f"O(log n) — raise max_iter"
+        )
+    return nodes.join(e, nodes.node == e.child, "left").select(
+        "node", F.coalesce("parent", F.col("node")).alias("label")
+    )
 
 
 def dedup_clusters(

@@ -85,33 +85,32 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank")
     )
-    # per-round cuts via LoopCheckpointer: chained Dataset checkpoints
-    # get geometrically slower with chain depth (plans/checkpoints.py);
-    # a 30-iteration PageRank would walk straight into it
-    with LoopCheckpointer(edges.sparkSession, "pagerank") as lc:
-        for _ in range(iters):
-            contribs = (
-                ew.join(ranks, ew["__src"] == ranks["node"])
-                .select(
-                    F.col("__dst").alias("node"),
-                    (F.col("rank") / F.col("__od")).alias("__c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__s"))
+    # per-round cuts via LoopCheckpointer; each round joins the ranks
+    # with the fixed edge and node tables, never with themselves
+    # (plans/checkpoints.py)
+    lc = LoopCheckpointer()
+    for _ in range(iters):
+        contribs = (
+            ew.join(ranks, ew["__src"] == ranks["node"])
+            .select(
+                F.col("__dst").alias("node"),
+                (F.col("rank") / F.col("__od")).alias("__c"),
             )
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(n_df))
-                .select(
-                    "node",
-                    (
-                        (1.0 - damping) / F.col("__n")
-                        + damping * F.coalesce(F.col("__s"), F.lit(0.0))
-                    ).alias("rank"),
-                )
+            .groupBy("node")
+            .agg(F.sum("__c").alias("__s"))
+        )
+        ranks = (
+            nodes.join(contribs, "node", "left")
+            .crossJoin(F.broadcast(n_df))
+            .select(
+                "node",
+                (
+                    (1.0 - damping) / F.col("__n")
+                    + damping * F.coalesce(F.col("__s"), F.lit(0.0))
+                ).alias("rank"),
             )
-            ranks = lc.cut(ranks)
-        ranks = lc.finish(ranks)
+        )
+        ranks = lc.cut(ranks)
     return ranks.select("node", F.round("rank", 6).alias("rank")).orderBy("node")
 
 
@@ -158,28 +157,24 @@ def bfs_distances(
         ).distinct()
     )
     frontier = dist.select("node")
-    # two cuts per round (frontier + visited set) — both through
-    # LoopCheckpointer so deep traversals never hit the geometric
-    # chained-checkpoint cost (plans/checkpoints.py)
-    with (
-        LoopCheckpointer(edges.sparkSession, "bfs-frontier") as lc_f,
-        LoopCheckpointer(edges.sparkSession, "bfs-dist") as lc_d,
-    ):
-        for hop in range(1, max_hops + 1):
-            if frontier.isEmpty():
-                break
-            nxt = (
-                frontier.join(e, frontier["node"] == e["__src"])
-                .select(F.col("__dst").alias("node"))
-                .distinct()
-                .join(dist.select("node"), "node", "left_anti")
-            )
-            nxt = lc_f.cut(nxt)
-            dist = lc_d.cut(
-                dist.unionByName(nxt.select("node", F.lit(hop).alias("dist")))
-            )
-            frontier = nxt
-        dist = lc_d.finish(dist)
+    # two cuts per round (frontier + visited set), one LoopCheckpointer
+    # each: a cut releases its own previous cut, and the next frontier's
+    # anti-join still reads the previous visited set
+    lc_f, lc_d = LoopCheckpointer(), LoopCheckpointer()
+    for hop in range(1, max_hops + 1):
+        if frontier.isEmpty():
+            break
+        nxt = (
+            frontier.join(e, frontier["node"] == e["__src"])
+            .select(F.col("__dst").alias("node"))
+            .distinct()
+            .join(dist.select("node"), "node", "left_anti")
+        )
+        nxt = lc_f.cut(nxt)
+        dist = lc_d.cut(
+            dist.unionByName(nxt.select("node", F.lit(hop).alias("dist")))
+        )
+        frontier = nxt
     return dist.orderBy("node")
 
 
@@ -482,20 +477,19 @@ def label_propagation(
     w = Window.partitionBy("__n").orderBy(
         F.col("__cnt").desc(), F.col("label").asc()
     )
-    with LoopCheckpointer(edges.sparkSession, "labelprop") as lc:
-        for _ in range(iters):
-            counts = (
-                nb.join(labels, nb["__m"] == labels["node"])
-                .groupBy("__n", "label")
-                .agg(F.count(F.lit(1)).alias("__cnt"))
-            )
-            labels = (
-                counts.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .select(F.col("__n").alias("node"), "label")
-            )
-            labels = lc.cut(labels)
-        labels = lc.finish(labels)
+    lc = LoopCheckpointer()
+    for _ in range(iters):
+        counts = (
+            nb.join(labels, nb["__m"] == labels["node"])
+            .groupBy("__n", "label")
+            .agg(F.count(F.lit(1)).alias("__cnt"))
+        )
+        labels = (
+            counts.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .select(F.col("__n").alias("node"), "label")
+        )
+        labels = lc.cut(labels)
     return labels.select("node", "label").orderBy("node")
 
 
@@ -549,31 +543,30 @@ def k_core(
         )
         return nb.groupBy("__n").agg(F.count(F.lit(1)).alias("__d"))
 
-    with LoopCheckpointer(edges.sparkSession, "kcore") as lc:
-        for _ in range(max_rounds):
-            # materialize the (small) dropped set once: the emptiness probe
-            # and the two anti-joins would otherwise each recompute the
-            # degree aggregation (2 jobs/round -> 1). Fresh truncation per
-            # round, never chained — dropped does not feed later lineage.
-            dropped = truncate_lineage(degrees(e).where(F.col("__d") < k).select("__n"))
-            # bounded driver state: one emptiness bit per round (an empty
-            # edge set yields an empty dropped set, so the all-peeled case
-            # exits here too, with a schema-correct empty result)
-            if dropped.isEmpty():
-                e = lc.finish(e)
-                return (
-                    degrees(e)
-                    .select(F.col("__n").alias("node"), F.col("__d").alias("degree"))
-                    .orderBy("node")
-                )
-            e = e.join(
-                dropped.withColumnRenamed("__n", "__u"), "__u", "left_anti"
-            ).join(dropped.withColumnRenamed("__n", "__v"), "__v", "left_anti")
-            e = lc.cut(e)
-        raise RuntimeError(
-            f"k_core did not stabilize in {max_rounds} rounds (peeling depth "
-            "exceeds the budget — raise max_rounds)"
-        )
+    lc = LoopCheckpointer()
+    for _ in range(max_rounds):
+        # materialize the (small) dropped set once: the emptiness probe
+        # and the two anti-joins would otherwise each recompute the
+        # degree aggregation (2 jobs/round -> 1). Fresh truncation per
+        # round, never chained — dropped does not feed later lineage.
+        dropped = truncate_lineage(degrees(e).where(F.col("__d") < k).select("__n"))
+        # bounded driver state: one emptiness bit per round (an empty
+        # edge set yields an empty dropped set, so the all-peeled case
+        # exits here too, with a schema-correct empty result)
+        if dropped.isEmpty():
+            return (
+                degrees(e)
+                .select(F.col("__n").alias("node"), F.col("__d").alias("degree"))
+                .orderBy("node")
+            )
+        e = e.join(
+            dropped.withColumnRenamed("__n", "__u"), "__u", "left_anti"
+        ).join(dropped.withColumnRenamed("__n", "__v"), "__v", "left_anti")
+        e = lc.cut(e)
+    raise RuntimeError(
+        f"k_core did not stabilize in {max_rounds} rounds (peeling depth "
+        "exceeds the budget — raise max_rounds)"
+    )
 
 
 def negative_sampling(
@@ -861,23 +854,18 @@ def hits_scores(
     # (the triangle_count x100 lesson — 1.5 GB sort spill at sf3.0
     # here). The build side is the |nodes|-row score vector: narrow,
     # well-estimated, |nodes|/partitions rows per task.
-    with (
-        LoopCheckpointer(edges.sparkSession, "hits_a") as lc_a,
-        LoopCheckpointer(edges.sparkSession, "hits_h") as lc_h,
-    ):
-        for _ in range(iters):
-            auth = lc_a.cut(
-                e.join(hub.hint("shuffle_hash"), e["__src"] == hub["node"])
-                .groupBy(F.col("__dst").alias("node"))
-                .agg(F.sum("__h").alias("__a"))
-            )
-            hub = lc_h.cut(
-                e.join(auth.hint("shuffle_hash"), e["__dst"] == auth["node"])
-                .groupBy(F.col("__src").alias("node"))
-                .agg(F.sum("__a").alias("__h"))
-            )
-        hub = lc_h.finish(hub)
-        auth = lc_a.finish(auth)
+    lc_a, lc_h = LoopCheckpointer(), LoopCheckpointer()
+    for _ in range(iters):
+        auth = lc_a.cut(
+            e.join(hub.hint("shuffle_hash"), e["__src"] == hub["node"])
+            .groupBy(F.col("__dst").alias("node"))
+            .agg(F.sum("__h").alias("__a"))
+        )
+        hub = lc_h.cut(
+            e.join(auth.hint("shuffle_hash"), e["__dst"] == auth["node"])
+            .groupBy(F.col("__src").alias("node"))
+            .agg(F.sum("__a").alias("__h"))
+        )
 
     totals = hub.agg(F.sum("__h").alias("__sh")).crossJoin(
         auth.agg(F.sum("__a").alias("__sa"))

@@ -428,38 +428,35 @@ def bpe_merges(
     )
     vocab = truncate_lineage(vocab)
     merges: list[tuple[int, str, str, str, int]] = []
-    with LoopCheckpointer(spark, "bpe") as lc:
-        for r in range(1, n_merges + 1):
-            syms = F.split(F.col("seq"), " ")
-            # guard: sequence(1, 0) would generate a DESCENDING range
-            idx = F.when(
-                F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
-            ).otherwise(F.array().cast("array<int>"))
-            pairs = F.transform(
-                idx,
-                lambda i: F.concat(
-                    F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
-                ),
-            )
-            best = (
-                vocab.select(F.explode(pairs).alias("pair"), "cnt")
-                .groupBy("pair")
-                .agg(F.sum("cnt").alias("pcnt"))
-                .orderBy(F.desc("pcnt"), F.asc("pair"))
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            pair, pcnt = best[0]["pair"], int(best[0]["pcnt"])
-            left, right = pair.split(" ")
-            merged = left + right
-            merges.append((r, left, right, merged, pcnt))
-            vocab = vocab.withColumn("seq", _apply_merge(F.col("seq"), left, right))
-            # LoopCheckpointer, not truncate_lineage: a 20+-merge run chains
-            # 20+ checkpoints, which gets geometrically slower with depth
-            # (plans/checkpoints.py)
-            vocab = lc.cut(vocab)
+    lc = LoopCheckpointer()
+    for r in range(1, n_merges + 1):
+        syms = F.split(F.col("seq"), " ")
+        # guard: sequence(1, 0) would generate a DESCENDING range
+        idx = F.when(
+            F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
+        ).otherwise(F.array().cast("array<int>"))
+        pairs = F.transform(
+            idx,
+            lambda i: F.concat(
+                F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
+            ),
+        )
+        best = (
+            vocab.select(F.explode(pairs).alias("pair"), "cnt")
+            .groupBy("pair")
+            .agg(F.sum("cnt").alias("pcnt"))
+            .orderBy(F.desc("pcnt"), F.asc("pair"))
+            .limit(1)
+            .collect()
+        )
+        if not best:
+            break
+        pair, pcnt = best[0]["pair"], int(best[0]["pcnt"])
+        left, right = pair.split(" ")
+        merged = left + right
+        merges.append((r, left, right, merged, pcnt))
+        vocab = vocab.withColumn("seq", _apply_merge(F.col("seq"), left, right))
+        vocab = lc.cut(vocab)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_count long"
     )

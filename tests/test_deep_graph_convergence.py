@@ -13,11 +13,14 @@ hand, at sf0.01 cost:
    n=48/100/256/1024). The `max_iter` budget here IS the assertion: an
    O(diameter) regression blows the log-sized budget and raises.
 
-2. `LoopCheckpointer.cut` stays WALL-FLAT with round depth. Chained
-   Dataset checkpoints slow down geometrically past depth ~14
-   (~2.5x/round — plans/checkpoints.py); a reintroduction turns round
-   20 into minutes. The guard fails FAST inside the loop on the first
-   pathological round instead of timing out the suite.
+2. Every loop operator's per-round cut keeps its size estimate growing
+   by a bounded number of digits per round. Chained cuts carry Spark's
+   size-only join estimate forward (a product of the children's
+   sizes), so a round that joins the cut state with itself doubles the
+   estimate's digit count per round and its BigInteger arithmetic
+   turns round ~20 into minutes (plans/checkpoints.py). The gate reads
+   the estimate, not the wall clock, so it is deterministic and fails
+   on the third cut instead of timing out around round 20.
 
 Reference analogue: the deep-DAG fault topologies the reference tests
 iterate (tez-tests/.../dag/SixLevelsFailingDAG.java).
@@ -27,13 +30,21 @@ from __future__ import annotations
 
 import math
 import random
-import time
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hdp_tez_spark.extensions.dedup import connected_components
-from hdp_tez_spark.plans.checkpoints import LoopCheckpointer
+from hdp_tez_spark.extensions.graph import (
+    bfs_distances,
+    hits_scores,
+    k_core,
+    label_propagation,
+    pagerank,
+)
+from hdp_tez_spark.extensions.textstats import bpe_merges
+from hdp_tez_spark.plans import checkpoints as CK
 from tests.conftest import SETTINGS as BASE_SETTINGS
 
 SETTINGS = {**BASE_SETTINGS, "max_examples": 4}
@@ -59,16 +70,15 @@ def _union_find_labels(n: int, edges: list[tuple[int, int]]) -> dict[int, int]:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    members: dict[int, set[int]] = {}
-    for a, b in edges:
-        for x in (a, b):
-            members.setdefault(find(x), set()).add(x)
-    want: dict[int, int] = {}
-    for grp in members.values():
-        m = min(grp)
-        for x in grp:
-            want[x] = m
-    return want
+    # every union keeps the smaller root, so a root is its component's min
+    return {x: find(x) for e in edges for x in e}
+
+
+def _chain(spark, n, seed=None):
+    ids = list(range(n))
+    if seed is not None:
+        random.Random(seed).shuffle(ids)
+    return spark.createDataFrame(list(zip(ids, ids[1:])), "src long, dst long")
 
 
 @given(n=st.integers(32, 300), seed=st.integers(0, 2**16))
@@ -77,15 +87,13 @@ def test_cc_chain_converges_in_log_rounds(spark, n, seed):
     """A shuffled chain is the deepest topology per node count
     (diameter n-1) with label values uncorrelated to positions — the
     case that exposed the r08 pointer-jump as superlinear."""
-    rng = random.Random(seed)
-    perm = list(range(n))
-    rng.shuffle(perm)
-    edges = [(perm[i], perm[i + 1]) for i in range(n - 1)]
     rounds: list[int] = []
     got = {
         r["node"]: r["label"]
         for r in connected_components(
-            spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT"),
+            _chain(spark, n, seed),
+            "src",
+            "dst",
             max_iter=_round_budget(n),  # raises on an O(diameter) regression
             on_round=lambda i, p: rounds.append(p),
         ).collect()
@@ -119,27 +127,49 @@ def test_cc_random_graph_matches_union_find(spark, n, seed):
     assert len(rounds) <= _round_budget(n)
 
 
-def test_loop_checkpointer_cuts_stay_wall_flat(spark):
-    """Drive 26 rounds of cut() on a constant small table and fail fast
-    on the first geometrically-slow round. Healthy cuts are ~0.1-0.5s
-    flat (parquet reset rounds slightly above); the chained-checkpoint
-    pathology reaches 2.5x-per-round growth past depth ~14, so round
-    ~17 already exceeds the 10x-median + 2s absolute guard — the test
-    fails in seconds instead of timing out the suite."""
-    df = spark.range(0, 5000).selectExpr("id", "id % 97 AS k")
-    times: list[float] = []
-    with LoopCheckpointer(spark, "flat-test") as lc:
-        state = df
-        for i in range(26):
-            state = state.selectExpr("id", "(k * 31 + 7) % 97 AS k")
-            t0 = time.time()
-            state = lc.cut(state)
-            took = time.time() - t0
-            times.append(took)
-            if i >= 10:
-                baseline = max(0.2, sorted(times[2:10])[len(times[2:10]) // 2])
-                assert took < 10 * baseline + 2.0, (
-                    f"round {i} cut took {took:.2f}s vs baseline "
-                    f"{baseline:.2f}s — geometric checkpoint-chain "
-                    f"slowdown reintroduced? times={['%.2f' % t for t in times]}"
-                )
+# Every loop operator on a tiny input, at least 6 cuts per loop state.
+_LOOPS = {
+    # a shuffled 256-node chain takes ~7 star rounds (docstring above)
+    "connected_components": lambda s: connected_components(
+        _chain(s, 256, seed=7), "src", "dst"
+    ),
+    "pagerank": lambda s: pagerank(_chain(s, 8), iters=6),
+    "bfs_distances": lambda s: bfs_distances(_chain(s, 8), s.range(1), max_hops=6),
+    "label_propagation": lambda s: label_propagation(_chain(s, 8), "src", "dst", 6),
+    # a path peels its two endpoints per round: 7 cuts on 14 nodes
+    "k_core": lambda s: k_core(_chain(s, 14), 2, "src", "dst"),
+    "hits_scores": lambda s: hits_scores(_chain(s, 8), iters=6),
+    "bpe_merges": lambda s: bpe_merges(s.createDataFrame([("abcdefgh",)], ["t"]), "t", 6),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOOPS))
+def test_loop_cut_size_estimate_grows_linearly(spark, monkeypatch, op):
+    """Chained cuts stay cheap only while a round's size estimate grows
+    by a bounded number of digits: a round that joins the cut state
+    with itself multiplies the estimate by itself, doubling its digit
+    count per round, and the BigInteger arithmetic then turns round ~20
+    into minutes (plans/checkpoints.py). Record the digit count of every
+    cut's `sizeInBytes` estimate and require the per-round increase not
+    to grow; healthy loops add a constant number of digits per round."""
+    digits: dict[CK.LoopCheckpointer, list[int]] = {}
+    cut = CK.LoopCheckpointer.cut
+
+    def recording_cut(self, df):
+        out = cut(self, df)
+        # py4j hands the BigInt over as a Python int, whose conversion
+        # raises past 4300 digits: a squaring loop fails either way
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        digits.setdefault(self, []).append(len(str(size)))
+        return out
+
+    monkeypatch.setattr(CK.LoopCheckpointer, "cut", recording_cut)
+    _LOOPS[op](spark)
+    assert digits and all(len(seq) >= 6 for seq in digits.values()), digits
+    for seq in digits.values():
+        steps = [b - a for a, b in zip(seq, seq[1:])]
+        # a squaring round doubles its step every round
+        assert max(steps[1:]) <= 1.5 * max(steps[0], 0) + 2, (
+            f"{op}: size-estimate digits {seq} grow faster every round — "
+            "does a round join the cut state with itself?"
+        )
